@@ -39,25 +39,140 @@ BENCH_QUERIES = [
     "sessionize",
     "normalize_text",
     "date_impute_duration",
+    # extended relational
+    "multiway_join_regional",
+    "salted_skew_join",
+    "rank_dense_ntile",
+    "asof_join",
     # flagship domain chain (reference fuzzy flow: 12m47s single-node,
     # BASELINE.md; here the full prep+match+band+gold chain)
     "fuzzy_salary_matches",
     "fuzzy_lightcast_durations",
     "gold_salary_matches_unique",
-    # the occupancy-capped blocking join (per-token row_number windows
-    # ahead of the candidate join) and the lossless salted lane (hot-set
-    # broadcast + explode replication ahead of the same join)
+    # training-data-pipeline suite
+    "exact_dedup",
+    "minhash_lsh_neardup",
+    "simhash_signatures",
+    # ANN: only the scale-safe paths are headline. ann_cosine_topk (the
+    # exact brute-force baseline, operators/ann.py) is deliberately
+    # quadratic and stays OUT of this suite; its correctness claim is
+    # carried by ann_ivf_recall_bound (IVF recall@10 vs the exact
+    # result, bounded in-query) with a bucketed/probed plan.
+    "ann_lsh_topk",
+    "ann_ivf_topk",
+    "ann_ivf_recall_bound",
+    "kmeans_iteration",
+    "token_counts",
+    "quality_scores",
+    "corpus_quality_by_source",
+    "tfidf_top_terms",
+    "pii_redaction",
+    "repetition_ratio",
+    "pack_sequences",
+    "benchmark_contamination",
+    "embedding_l2_normalize",
+    "winsorize_clip",
+    # corpus-curation suite (round 4)
+    "boilerplate_ngram_flags",
+    "chunk_dedup",
+    "unigram_surprisal_quality",
+    "hard_negative_mining",
+    "snapshot_diff",
+    "pagerank_iteration",
+    "key_skew_profile",
+    "heavy_hitters_bound",
+    "curation_keep_decisions",
+    "epoch_shuffle",
+    "dedup_funnel",
+    "vocab_coverage",
+    "pmi_cooccurrence",
+    "triangle_count",
+    "record_linkage_scores",
+    # sequence/session suite (round-4 continuation)
+    "forward_fill",
+    "time_weighted_avg",
+    "bpe_pair_counts",
+    "quantile_bucketize",
+    "asof_join_nearest",
+    "interval_coalesce",
+    # published curation rule sets (round-4 continuation)
+    "gopher_quality_flags",
+    "c4_quality_rules",
+    "dsir_importance_weights",
+    "ccnet_perplexity_buckets",
+    "bpe_apply_merge",
+    "hybrid_rrf_retrieval",
+    # round-5 additions: one slot per previously-unbenched plan FAMILY
+    # so regressions in each family are visible (round-4 ask #7) -
+    # iterative component closure, unrolled frontier expansion,
+    # window-chained interval versioning, shard-prefix weighted rank,
+    # batch-vs-index probe, and the full training loop.
+    "neardup_keep_list",
+    "bfs_distance",
+    "scd2_intervals",
+    "weighted_median",
+    "incremental_neardup_batch",
+    "bpe_train_merges",
+    # round-5 published-method additions
+    "semdedup_prune",
+    "winnowing_fingerprints",
+    "mixture_temperature_weights",
+    "cms_frequency_bound",
+    "duplicate_span_detect",
+    "distinct_ngram_diversity",
+    "stupid_backoff_score",
+    "tokenizer_fertility",
+    "source_vocab_overlap",
+    "duplicate_span_removal",
+    # round-6 additions
+    "bloom_membership_gate",
+    "corpus_mix_plan",
+    "ann_pq_adc_topk",
+    "ann_pq_recall_bound",
+    "content_defined_chunks",
+    "containment_neardup",
+    "ann_ivfadc_topk",
+    "kmv_source_similarity",
+    "kmv_source_novelty",
+    "quality_classifier_scores",
+    "domain_reputation_gate",
+    # minhash_lsh_recall earned a slot once its exact lane was
+    # panel-bounded (r6): both lanes now linear-in-corpus, so the slot
+    # times the production gate shape rather than a quadratic harness.
+    "minhash_lsh_recall",
+    # round-7 additions
+    "corpus_mix_plan_staged",
+    "ann_ivfadc_residual_topk",
+    "ann_ivfadc_residual_recall",
+    # round-8 additions
+    "ann_ivfadc_rerank_topk",
+    # bpe_encode_corpus stays OUT: encode re-runs the train loop
+    # bpe_train_merges already times before its map-only encode.
+    # round-9 additions: the occupancy-capped blocking join (new plan
+    # family: per-token row_number windows ahead of the candidate join),
+    # the lossless salted lane (hot-set broadcast + explode replication
+    # ahead of the same join), and the grid-split LSH self-join
+    # (occupancy-gated G x G matrix partitioning of hot buckets).
     "fuzzy_block_capped",
     "fuzzy_block_salted",
-    # incremental fuzzy matching: persisted blocking-index probe for the
-    # delta batch + one-shot prior, unioned (the weekly-cadence
-    # alternative to the reference's full re-match)
+    "minhash_lsh_split",
+    # round-10 addition: incremental view maintenance - a new plan
+    # family (partial-state union + group-sized re-merge across delta
+    # batches; the GOLD-refresh alternative to full recompute). The
+    # retraction and rollup rows share the family (BENCH.md registry).
+    "incremental_agg_refresh",
+    # round-11 addition: incremental fuzzy matching - a new plan family
+    # (persisted blocking-index probe for the delta batch + one-shot
+    # prior, unioned; the weekly-cadence alternative to the reference's
+    # full re-match).
     "fuzzy_incremental_union",
-    # capped index append maintenance + compaction probed end-to-end
-    # (same plan family as fuzzy_incremental_union plus the cap window)
+    # round-12 addition: capped index append maintenance + compaction
+    # probed end-to-end (the hot-key occupancy lever's exactness story;
+    # same plan family as fuzzy_incremental_union plus the cap window).
     "fuzzy_index_compaction",
-    # matches-corpus fold (per-batch ingest outputs -> versioned base +
-    # manifest, read through base+unfolded)
+    # round-13 addition: matches-corpus fold (per-batch ingest outputs
+    # -> versioned base + manifest, read through base+unfolded; the
+    # small-files retirement on the matches side of the lifecycle).
     "matches_corpus_compaction",
 ]
 

@@ -9,20 +9,16 @@ Layout
 - ``session``    : SparkSession factory (AQE, Arrow, UTC, tuned shuffle).
 - ``schemas``    : explicit StructTypes for domain + testdata tables.
 - ``functions``  : pure Column expression library (text normalization,
-                   dates, similarity, character shingles) - JVM-side,
-                   codegen-friendly.
-- ``operators``  : relational operator wrappers, fuzzy similarity joins,
-                   incremental aggregate state, bucketed tables.
-- ``sources``    : paginated REST API source, file and object-store
-                   helpers (parquet, xlsx, lenient csv).
+                   dates, similarity) - JVM-side, codegen-friendly.
+- ``operators``  : relational operator library, fuzzy similarity joins,
+                   dedup, similarity search, text analysis, multimodal.
+- ``sources``    : paginated REST API source, parquet helpers, xlsx.
 - ``pipelines``  : the hiring-audit refresh (BRONZE -> fuzzy joins ->
                    GOLD) and the BRONZE/GOLD catalog namespaces.
 - ``serving``    : paginated GOLD reads and dashboard aggregates.
 - ``plans``      : physical-plan inspection helpers for plan-quality gates.
 - ``lease``      : single-writer lease for the fuzzy-match lifecycle.
-- ``driver_queries`` / ``driver_queries_domain``: the named query
-                   registry behind ``__spark_entry__``, each query with
-                   a DuckDB oracle.
+- ``streaming``  : Structured Streaming incremental ingest + windowed aggs.
 """
 
 __version__ = "0.1.0"

@@ -55,14 +55,14 @@ Spark value).
 
 Each callable takes (spark, sf_dir) and returns a lazy DataFrame.
 
-Caching contract: a query may ``persist()`` a multi-consumer
-intermediate and NOT unpersist it - the returned DataFrame is lazy, so
-the query cannot know when its consumer is done. Any long-lived harness
-that runs many queries in one session MUST call
-``spark.catalog.clearCache()`` between queries (bench.py and
-tests/test_oracle_parity.py both do); skipping it accumulates leaked
-storage blocks until GC thrash (a leaked persist once inflated a 5 s
-reading to 79 s).
+Caching contract: some queries ``persist()`` a multi-consumer
+intermediate (e.g. the token/span relations in the dedup family) and do
+NOT unpersist it - the returned DataFrame is lazy, so the query cannot
+know when its consumer is done. Any long-lived harness that runs many
+queries in one session MUST call ``spark.catalog.clearCache()`` between
+queries (bench.py, tools/scale_probe.py and tests/test_oracle_parity.py
+all do); skipping it accumulates leaked storage blocks until GC thrash
+(a leaked persist once inflated a 5 s scale-probe reading to 79 s).
 """
 
 from __future__ import annotations
@@ -1109,10 +1109,37 @@ def q_impute_group_mean(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# hiring-audit suite (fuzzy-title chain + GOLD SQL twin) registers its
-# queries into the same QUERIES/ORACLE registry
+# training-data-pipeline suite (dedup / similarity search / text analysis)
+# registers additional queries into the same QUERIES/ORACLE registry
 # ---------------------------------------------------------------------------
 
 from nyc_government_hiring_audit_data_platform_spark import (  # noqa: E402,F401
+    driver_queries_datapipe as _datapipe,
+)
+from nyc_government_hiring_audit_data_platform_spark import (  # noqa: E402,F401
+    driver_queries_datapipe2 as _datapipe2,
+)
+from nyc_government_hiring_audit_data_platform_spark import (  # noqa: E402,F401
     driver_queries_domain as _domain,
+)
+from nyc_government_hiring_audit_data_platform_spark import (  # noqa: E402,F401
+    driver_queries_extended as _extended,
+)
+from nyc_government_hiring_audit_data_platform_spark import (  # noqa: E402,F401
+    driver_queries_curation as _curation,
+)
+from nyc_government_hiring_audit_data_platform_spark import (  # noqa: E402,F401
+    driver_queries_sequence as _sequence,
+)
+from nyc_government_hiring_audit_data_platform_spark import (  # noqa: E402,F401
+    driver_queries_audit as _audit,
+)
+from nyc_government_hiring_audit_data_platform_spark import (  # noqa: E402,F401
+    driver_queries_quality as _quality,
+)
+from nyc_government_hiring_audit_data_platform_spark import (  # noqa: E402,F401
+    driver_queries_incremental as _incremental,
+)
+from nyc_government_hiring_audit_data_platform_spark import (  # noqa: E402,F401
+    driver_queries_ingest as _ingest,
 )

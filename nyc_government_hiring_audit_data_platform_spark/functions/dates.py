@@ -72,3 +72,15 @@ def posting_duration_days(post_until: Column | str, posting_date: Column | str) 
     return F.datediff(
         parse_post_until(post_until), F.to_date(parse_posting_ts(posting_date))
     ).cast("int")
+
+
+def epoch_seconds_sql(ts_expr: str = "ts") -> str:
+    """DuckDB whole-seconds-since-epoch, truncated exactly like Spark's
+    ``unix_seconds`` (floor for the positive epochs this data has).
+    The ONE definition both engines' sequence/audit queries share - a
+    second copy that drifts (e.g. a negative-epoch fix applied to one
+    site) would silently diverge the engines."""
+    return (
+        f"date_diff('second', TIMESTAMP '1970-01-01 00:00:00', "
+        f"date_trunc('second', {ts_expr}))"
+    )

@@ -1,7 +1,13 @@
-"""Character shingles for the fuzzy-title candidate generator.
+"""Text-analysis primitives for large-scale training-data pipelines.
 
-A pure Column expression chain (JVM-side, no UDF) over the normalized
-text of ``functions.text`` (reference: src/utils.py:20-29).
+Everything here is a pure Column expression chain (JVM-side, no UDF)
+with a twin DuckDB-SQL generator so the driver's oracle runs the exact
+same formula. Shared constants (stopword lists, shingle sizes, token
+regexes) live in this module so both sides derive from one source.
+
+These extend the reference's text surface (normalize_title,
+reference: src/utils.py:20-29) toward the 100 TB training-data use
+case: language ID, quality scoring, token counting, fingerprinting.
 """
 
 from __future__ import annotations
@@ -11,19 +17,81 @@ from pyspark.sql import functions as F
 
 from nyc_government_hiring_audit_data_platform_spark.functions.text import (
     normalize_text,
+    normalize_text_sql,
+    tokens,
 )
 
-# Character n-gram size. 5 rather than the classic 3 because short
-# n-grams over a small vocabulary give every pair a high baseline
-# jaccard, which floods candidate generation with false pairs.
+# --------------------------------------------------------------------------
+# shared constants (single source of truth for Spark AND the SQL oracle)
+# --------------------------------------------------------------------------
+
+# Tiny per-language stopword inventories for the n-gram/stopword
+# language-ID heuristic. Deliberately small and disjoint-ish: the
+# heuristic is "which language's function words dominate".
+STOPWORDS = {
+    "en": ["the", "a", "of", "and", "to", "in", "is", "that", "it", "for"],
+    "fr": ["le", "la", "de", "et", "les", "des", "un", "une", "est", "que"],
+    "de": ["der", "die", "das", "und", "ist", "ein", "eine", "zu", "den", "von"],
+    "es": ["el", "la", "de", "y", "los", "las", "un", "una", "es", "que"],
+}
+
+# BPE-ish word/number/punct splitter: runs of letters, runs of digits,
+# or single non-space symbols - a cheap deterministic stand-in for a
+# real subword tokenizer's pre-tokenization.
+BPE_ISH_REGEX = "[a-z]+|[0-9]+|[^a-z0-9 ]"
+
+# Character n-gram size for jaccard / fingerprints / minhash. 5 rather
+# than the classic 3 because short n-grams over a small vocabulary give
+# every document pair a high baseline jaccard (~0.44 on the synthetic
+# corpus), which floods LSH with false candidates; 5-grams drop the
+# baseline to ~0.17 while true near-dups stay >0.9.
 SHINGLE_N = 5
+
+
+def _c(col: Column | str) -> Column:
+    return F.col(col) if isinstance(col, str) else col
+
+
+# --------------------------------------------------------------------------
+# token counting
+# --------------------------------------------------------------------------
+
+
+def whitespace_token_count(col: Column | str) -> Column:
+    """Number of whitespace-delimited tokens after normalization."""
+    return F.size(tokens(col))
+
+
+def whitespace_token_count_sql(expr: str) -> str:
+    return f"len(list_filter(string_split({normalize_text_sql(expr)}, ' '), t -> t <> ''))"
+
+
+def bpe_ish_token_count(col: Column | str) -> Column:
+    """Count of BPE-ish pre-tokens (letter runs / digit runs / symbols)
+    over the lowercased raw text - approximates LLM token count much
+    closer than whitespace splitting."""
+    c = F.lower(F.coalesce(_c(col).cast("string"), F.lit("")))
+    return F.size(F.regexp_extract_all(c, F.lit(BPE_ISH_REGEX), 0))
+
+
+def bpe_ish_token_count_sql(expr: str) -> str:
+    return (
+        f"len(regexp_extract_all(lower(coalesce(CAST({expr} AS VARCHAR), '')), "
+        f"'{BPE_ISH_REGEX}'))"
+    )
+
+
+# --------------------------------------------------------------------------
+# character shingles
+# --------------------------------------------------------------------------
 
 
 def char_shingles(col: Column | str, n: int = SHINGLE_N) -> Column:
     """Distinct character n-grams of the normalized text, as
     array<string>. Expression-only: sequence + transform + substring.
     Short texts (< n chars) yield an empty array - guarded explicitly
-    because Spark's ``sequence(1, 0)`` counts DOWN.
+    because Spark's ``sequence(1, 0)`` counts DOWN while DuckDB's
+    ``generate_series(1, 0)`` is empty.
 
     Two O(len^2)-per-document traps are engineered out (both measured
     on a 20k-token doc):
@@ -48,3 +116,185 @@ def char_shingles(col: Column | str, n: int = SHINGLE_N) -> Column:
     return F.element_at(
         F.transform(F.array(F.split(normalize_text(col), "")), shingled), 1
     )
+
+
+def char_shingles_sql(expr: str, n: int = SHINGLE_N) -> str:
+    s = normalize_text_sql(expr)
+    return (
+        f"list_distinct(list_transform("
+        f"generate_series(1, greatest(length({s}) - {n - 1}, 0)), "
+        f"i -> substring({s}, i, {n})))"
+    )
+
+
+# --------------------------------------------------------------------------
+# quality scoring
+# --------------------------------------------------------------------------
+
+
+def punct_ratio(col: Column | str) -> Column:
+    """Fraction of raw characters that are punctuation (0 when empty)."""
+    c = F.coalesce(_c(col).cast("string"), F.lit(""))
+    n_punct = F.length(c) - F.length(
+        F.regexp_replace(c, r"""[!"#$%&'()*+,\-./:;<=>?@\[\\\]^_`{|}~]""", "")
+    )
+    return F.when(F.length(c) == 0, F.lit(0.0)).otherwise(
+        n_punct.cast("double") / F.length(c)
+    )
+
+
+def punct_ratio_sql(expr: str) -> str:
+    c = f"coalesce(CAST({expr} AS VARCHAR), '')"
+    cls = r"""[!"#$%&'()*+,\-./:;<=>?@\[\\\]^_`{|}~]""".replace("'", "''")
+    stripped = f"regexp_replace({c}, '{cls}', '', 'g')"
+    return (
+        f"CASE WHEN length({c}) = 0 THEN 0.0 "
+        f"ELSE CAST(length({c}) - length({stripped}) AS DOUBLE) / length({c}) END"
+    )
+
+
+def stopword_ratio(col: Column | str, lang: str = "en") -> Column:
+    """Fraction of normalized tokens that are stopwords of ``lang``."""
+    toks = tokens(col)
+    stops = F.array(*[F.lit(w) for w in STOPWORDS[lang]])
+    n_stop = F.size(F.filter(toks, lambda t: F.array_contains(stops, t)))
+    return F.when(F.size(toks) == 0, F.lit(0.0)).otherwise(
+        n_stop.cast("double") / F.size(toks)
+    )
+
+
+def _tokens_sql(expr: str) -> str:
+    return f"list_filter(string_split({normalize_text_sql(expr)}, ' '), t -> t <> '')"
+
+
+def stopword_ratio_sql(expr: str, lang: str = "en") -> str:
+    toks = _tokens_sql(expr)
+    stops = "[" + ", ".join(f"'{w}'" for w in STOPWORDS[lang]) + "]"
+    return (
+        f"CASE WHEN len({toks}) = 0 THEN 0.0 ELSE "
+        f"CAST(len(list_filter({toks}, t -> list_contains({stops}, t))) AS DOUBLE)"
+        f" / len({toks}) END"
+    )
+
+
+def mean_token_len(col: Column | str) -> Column:
+    toks = tokens(col)
+    total = F.aggregate(toks, F.lit(0), lambda acc, t: acc + F.length(t))
+    return F.when(F.size(toks) == 0, F.lit(0.0)).otherwise(
+        total.cast("double") / F.size(toks)
+    )
+
+
+def mean_token_len_sql(expr: str) -> str:
+    toks = _tokens_sql(expr)
+    return (
+        f"CASE WHEN len({toks}) = 0 THEN 0.0 ELSE "
+        f"CAST(list_sum(list_transform({toks}, t -> length(t))) AS DOUBLE)"
+        f" / len({toks}) END"
+    )
+
+
+def quality_score(col: Column | str) -> Column:
+    """Composite 0-1 quality heuristic: rewards mid-length documents and
+    normal word lengths, penalizes punctuation soup; mirrors the
+    length/punct/stopword feature family used by web-scale corpus
+    filters (e.g. C4-style heuristics)."""
+    c = F.coalesce(_c(col).cast("string"), F.lit(""))
+    len_score = F.least(F.length(c).cast("double") / 200.0, F.lit(1.0))
+    # bind mean_token_len to a lambda variable so the tokenize+mean runs
+    # once per row, not once per comparison (no CSE in interpreted mode)
+    word_score = F.element_at(
+        F.transform(
+            F.array(mean_token_len(col)),
+            lambda m: F.when((m >= 3.0) & (m <= 10.0), 1.0).otherwise(0.5),
+        ),
+        1,
+    )
+    punct_pen = F.least(punct_ratio(col) * 5.0, F.lit(1.0))
+    stop_score = F.least(stopword_ratio(col, "en") * 4.0, F.lit(1.0))
+    return F.round(
+        0.35 * len_score + 0.25 * word_score + 0.25 * stop_score
+        + 0.15 * (1.0 - punct_pen),
+        6,
+    )
+
+
+def quality_score_sql(expr: str) -> str:
+    c = f"coalesce(CAST({expr} AS VARCHAR), '')"
+    mtl = mean_token_len_sql(expr)
+    return (
+        "ROUND("
+        f"0.35 * least(CAST(length({c}) AS DOUBLE) / 200.0, 1.0) "
+        f"+ 0.25 * (CASE WHEN {mtl} >= 3.0 AND {mtl} <= 10.0 THEN 1.0 ELSE 0.5 END) "
+        f"+ 0.25 * least({stopword_ratio_sql(expr, 'en')} * 4.0, 1.0) "
+        f"+ 0.15 * (1.0 - least({punct_ratio_sql(expr)} * 5.0, 1.0))"
+        ", 6)"
+    )
+
+
+# --------------------------------------------------------------------------
+# language ID
+# --------------------------------------------------------------------------
+
+
+def lang_id(col: Column | str) -> Column:
+    """Stopword-inventory language ID: the language whose function words
+    occur most among the document's tokens; 'und' (undetermined) when no
+    language scores > 0. Ties break by language code order (deterministic,
+    mirrored in the oracle via the same comparison chain)."""
+    toks = tokens(col)
+
+    def _count_in(stops):
+        # one-arg lambda: a two-arg lambda would make PySpark bind the
+        # second parameter to the element INDEX, not our closure default
+        return F.size(F.filter(toks, lambda t: F.array_contains(stops, t)))
+
+    scores = {}
+    for lang_code, words in sorted(STOPWORDS.items()):
+        stops = F.array(*[F.lit(w) for w in words])
+        scores[lang_code] = _count_in(stops)
+    best = F.lit("und")
+    best_score = F.lit(0)
+    # iterate in reverse-sorted order so that earlier codes win ties
+    for lang_code in sorted(scores, reverse=True):
+        sc = scores[lang_code]
+        take = sc >= F.greatest(best_score, F.lit(1))
+        best = F.when(take, F.lit(lang_code)).otherwise(best)
+        best_score = F.when(take, sc).otherwise(best_score)
+    return best
+
+
+def lang_id_sql(expr: str) -> str:
+    toks = _tokens_sql(expr)
+    score = {}
+    for lang_code, words in sorted(STOPWORDS.items()):
+        stops = "[" + ", ".join(f"'{w}'" for w in words) + "]"
+        score[lang_code] = f"len(list_filter({toks}, t -> list_contains({stops}, t)))"
+    # replicate the same reverse-order fold: earlier codes win ties
+    out = "'und'"
+    best = "0"
+    for lang_code in sorted(score, reverse=True):
+        sc = score[lang_code]
+        out = f"CASE WHEN {sc} >= greatest({best}, 1) THEN '{lang_code}' ELSE {out} END"
+        best = f"CASE WHEN {sc} >= greatest({best}, 1) THEN {sc} ELSE {best} END"
+    return out
+
+
+# --------------------------------------------------------------------------
+# document fingerprinting
+# --------------------------------------------------------------------------
+
+
+def doc_fingerprint(col: Column | str, n: int = SHINGLE_N) -> Column:
+    """Deterministic document fingerprint: the minimum md5 of the
+    document's character n-gram shingles (hex md5 is fixed-width, so
+    lexicographic MIN == numeric MIN - portable across engines).
+    Shingle-local, so it is robust to appending/prepending content,
+    unlike a whole-document hash."""
+    sh = char_shingles(col, n)
+    hashed = F.transform(sh, lambda s: F.md5(s.cast("binary")))
+    return F.array_min(hashed)
+
+
+def doc_fingerprint_sql(expr: str, n: int = SHINGLE_N) -> str:
+    return f"list_min(list_transform({char_shingles_sql(expr, n)}, s -> md5(s)))"

@@ -12,9 +12,9 @@ turns the docstring rule into a mechanism (round-12 VERDICT ask #2):
   (never a partially-written lease on disk); a live holder makes every
   other entry point REFUSE loudly (:class:`LeaseHeldError`);
 - liveness is the file's mtime: holders heartbeat per micro-batch, and
-  a lease older than ``stale_after`` is TAKEN OVER (rename-then-remove,
-  so exactly one contender wins the race) - a crashed writer never
-  wedges the cadence;
+  a lease older than ``stale_after`` is TAKEN OVER (under an exclusive
+  ``.takeover.lock`` file, rename-then-remove, so exactly one contender
+  wins the race) - a crashed writer never wedges the cadence;
 - a holder that lost its lease to a takeover finds out at the next
   heartbeat or at release and raises :class:`LeaseLostError` - the
   signal that ``stale_after`` was sized below a real batch duration.
@@ -26,7 +26,9 @@ read-verify and its ``os.remove``, a takeover could slip in and lose
 the new holder's lease file; (b) a takeover that renamed away a
 just-refreshed lease restores it via a link that refuses to clobber -
 if a third contender claimed in that gap, the deposed holder learns at
-its next heartbeat. Size ``stale_after`` above the longest interval
+its next heartbeat. A contender killed while holding the takeover lock
+makes stale-lease contenders refuse until the entry sweep clears the
+lock, ``stale_after`` later. Size ``stale_after`` above the longest interval
 between heartbeats: the sinks heartbeat per micro-batch, the
 compaction steps once per fold (after materializing, before their
 commit swaps) - so above the longest batch OR fold, whichever is
@@ -146,6 +148,7 @@ def _acquire(lease_dir: str, step: str, stale_after: float) -> Lease:
                 pass
     owner = uuid.uuid4().hex
     claim = path + f".claim.{owner}"
+    lock = path + ".takeover.lock"
     with open(claim, "w") as f:
         json.dump({"owner": owner, "step": step, "pid": os.getpid()}, f)
     try:
@@ -160,60 +163,88 @@ def _acquire(lease_dir: str, step: str, stale_after: float) -> Lease:
             except OSError:
                 continue  # racing a release/takeover: retry the claim
             if age <= stale_after:
-                held = Lease(path, "", "")._holder()
-                raise LeaseHeldError(
-                    f"the lifecycle lease at {path} is held by "
-                    f"{(held or {}).get('step', 'an unreadable holder')!r} "
-                    f"(pid {(held or {}).get('pid')}, heartbeat "
-                    f"{age:.0f}s ago, stale_after={stale_after:.0f}s): the "
-                    "ingest/maintenance/compaction steps are single-writer "
-                    "- wait for it to finish, or raise stale_after only "
-                    "if you are SURE the holder is dead"
-                )
-            stale = path + f".takeover.{owner}"
+                _refuse(path, age, stale_after, takeover=False)
+            # one takeover at a time: without the lock, a contender that
+            # judged the OLD incarnation stale could rename away the
+            # fresh lease a peer's takeover just linked, and a third
+            # contender could claim the gap before the restore - two
+            # holders. A peer already taking over means this contender
+            # would lose the race anyway: refuse like any live holder.
             try:
-                os.rename(path, stale)
-            except FileNotFoundError:
-                continue  # another contender won; re-contend fresh
-            # verify the rename grabbed a STALE incarnation: between
-            # the age check and the rename the holder could heartbeat,
-            # or release and a new holder acquire - either way the file
-            # would carry a FRESH mtime (a re-acquire links a claim
-            # written syscalls ago), so mtime alone decides. Content is
-            # deliberately NOT consulted: an unreadable-but-stale lease
-            # (torn external write) must still be taken over, never
-            # restored in a spin (review r13, pass 2).
+                os.close(os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY))
+            except FileExistsError:
+                _refuse(path, age, stale_after, takeover=True)
             try:
-                renamed_age = time.time() - os.path.getmtime(stale)
-            except OSError:
-                continue  # a peer's litter sweep removed it: re-contend
-            if renamed_age <= stale_after:
-                # deposed a live holder: restore, but NEVER by
-                # clobbering a third contender that claimed the freed
-                # path meanwhile (link refuses; in that residual
-                # few-syscall window the deposed holder still sees
-                # LeaseLostError at its next heartbeat - the documented
-                # file-lease residue)
+                _take_over(path, path + f".takeover.{owner}", stale_after)
+            finally:
                 try:
-                    os.link(stale, path)
-                except FileExistsError:
-                    pass
-                except FileNotFoundError:
-                    pass  # sweep race: nothing left to restore
-                try:
-                    os.remove(stale)
+                    os.remove(lock)
                 except FileNotFoundError:
                     pass
-                continue
-            try:
-                os.remove(stale)  # verified-stale: this contender freed it
-            except FileNotFoundError:
-                pass  # a peer's sweep finished it; same outcome
     finally:
         try:
             os.remove(claim)
         except FileNotFoundError:
             pass
+
+
+def _refuse(path: str, age: float, stale_after: float, takeover: bool):
+    held = None if takeover else Lease(path, "", "")._holder()
+    who = (
+        "a peer's stale-lease takeover"
+        if takeover
+        else (held or {}).get("step", "an unreadable holder")
+    )
+    raise LeaseHeldError(
+        f"the lifecycle lease at {path} is held by {who!r} "
+        f"(pid {(held or {}).get('pid')}, heartbeat "
+        f"{age:.0f}s ago, stale_after={stale_after:.0f}s): the "
+        "ingest/maintenance/compaction steps are single-writer "
+        "- wait for it to finish, or raise stale_after only "
+        "if you are SURE the holder is dead"
+    )
+
+
+def _take_over(path: str, stale: str, stale_after: float) -> None:
+    """Remove the stale lease at ``path`` (caller holds the takeover
+    lock); the caller then re-contends for the freed path."""
+    # re-judge under the lock: a peer's takeover may have completed
+    # (and a new holder linked a fresh lease) since this contender's
+    # age check
+    try:
+        if time.time() - os.path.getmtime(path) <= stale_after:
+            return
+    except OSError:
+        return  # released meanwhile: re-contend
+    try:
+        os.rename(path, stale)
+    except FileNotFoundError:
+        return  # released meanwhile: re-contend fresh
+    # verify the rename grabbed a STALE incarnation: between the age
+    # check and the rename the holder could heartbeat, or release and a
+    # new holder acquire - either way the file would carry a FRESH mtime
+    # (a re-acquire links a claim written syscalls ago), so mtime alone
+    # decides. Content is deliberately NOT consulted: an
+    # unreadable-but-stale lease (torn external write) must still be
+    # taken over, never restored in a spin (review r13, pass 2).
+    try:
+        renamed_age = time.time() - os.path.getmtime(stale)
+    except OSError:
+        return  # a peer's litter sweep removed it: re-contend
+    if renamed_age <= stale_after:
+        # deposed a live holder: restore, but NEVER by clobbering a
+        # third contender that claimed the freed path meanwhile (link
+        # refuses; in that residual few-syscall window the deposed
+        # holder still sees LeaseLostError at its next heartbeat - the
+        # documented file-lease residue)
+        try:
+            os.link(stale, path)
+        except (FileExistsError, FileNotFoundError):
+            pass  # FileNotFoundError: sweep race, nothing to restore
+    try:
+        os.remove(stale)  # verified-stale: this contender freed it
+    except FileNotFoundError:
+        pass  # a peer's sweep finished it; same outcome
 
 
 @contextmanager

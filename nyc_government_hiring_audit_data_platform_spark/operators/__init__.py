@@ -1,3 +1,3 @@
 """Operator library: relational wrappers (SURVEY.md §2.2-2.8), fuzzy
-similarity joins (§2.3), incremental aggregate state and bucketed
-tables."""
+similarity joins (§2.3), and the training-data-pipeline extensions
+(dedup, similarity search, text analysis, multimodal)."""

@@ -194,7 +194,8 @@ def _cap_block_occupancy(
     """Deterministically truncate each blocking-key group to its
     ``max_block`` lowest-ranked members (rank = ``order_cols`` asc).
 
-    One row_number window partitioned on the candidate join's key.
+    Same enforcement shape as dedup.minhash_lsh_pairs(max_bucket=...):
+    one row_number window partitioned on the candidate join's key.
     Plan cost (plan-gated in tests/test_plans.py): Spark compiles the
     rank<=k filter to WindowGroupLimit with a PARTIAL map-side stage
     BELOW the window's exchange, so every mapper truncates each key to
@@ -320,8 +321,8 @@ def fuzzy_title_pairs(
     adversarial short single-token strings ('abcd'/'abxcd' = 88.9), not
     realistic titles (brute-force equality on the domain fixtures is
     asserted at the reference's 85/75 cutoffs). (At extreme scale swap
-    the 4-gram block for MinHash-LSH over title shingles to bound
-    candidates.)
+    the 4-gram block for MinHash-LSH over title shingles -
+    operators.dedup.minhash_lsh_pairs - to bound candidates.)
 
     ``max_block`` - HOT-KEY occupancy cap (see fuzzy_title_pairs_tokensort
     for the measured motivation): each blocking key (token or 4-gram)
@@ -459,7 +460,8 @@ def fuzzy_title_pairs_tokensort(
     explosion happens inside one join task, invisible to input-size
     skew detection. When ``max_block`` is set, each token keeps only
     its max_block lowest-(key, title) members per side (row_number
-    window on the join key; map-side partial WindowGroupLimit, see
+    window on the join key - the dedup.minhash_lsh_pairs(max_bucket)
+    pattern; map-side partial WindowGroupLimit, see
     _cap_block_occupancy), bounding per-token
     candidates at max_block^2. Recall semantics: capped output is a
     strict SUBSET; a pair is lost only if EVERY token it shares is
@@ -648,10 +650,10 @@ def fuzzy_join(
 # (src/fuzzy_flows.py:16-23 schedules the full fuzzy_match_salary_flow
 # weekly; src/fuzzy_match_salary.py:27-189 always scans both sides in
 # full). At 100 TB that weekly cadence re-pays the whole blocking join
-# for a delta that is typically <1% of the corpus. In the incremental
-# lane the STABLE side (payroll titles - new payroll lands yearly,
-# postings weekly) persists ONCE as its exploded blocking index, and
-# each postings batch probes
+# for a delta that is typically <1% of the corpus. The incremental lane
+# mirrors dedup's build_band_index/incremental_neardup: the STABLE side
+# (payroll titles - new payroll lands yearly, postings weekly) persists
+# ONCE as its exploded blocking index, and each postings batch probes
 # the index with cost O(|delta keys| + matched blocks) instead of
 # O(|payroll| + |postings|). Because a scored pair is a pure function of
 # the two titles and the candidate/scoring stages are the SAME code as
@@ -661,7 +663,7 @@ def fuzzy_join(
 #
 # Index layout: one row per (blocking key, title). Persist it
 # partitioned/bucketed on the key column in production so a delta probe
-# shuffles only its own exploded keys.
+# shuffles only its own exploded keys (the dedup band index's contract).
 
 
 def build_fuzzy_title_index(
@@ -896,9 +898,10 @@ _VERIFIED_BUCKET_SPECS: dict = {}
 def _index_table_name(index_dir: str) -> str:
     """Deterministic catalog identifier for a bucketed title index,
     derived from the absolute path alone so any session can re-register
-    (or defensively DROP) the entry. The munged readable form alone
-    collides across distinct dirs, so an md5 of the exact path rides in
-    the name."""
+    (or defensively DROP) the entry. Same collision-hardening as the
+    IVM state tables (streaming/jobs.py:_state_table_name): the munged
+    readable form alone collides across distinct dirs, so an md5 of
+    the exact path rides in the name."""
     import hashlib
     import os
 
@@ -1021,7 +1024,8 @@ def _resolve_index_table(spark, index_dir: str, meta: dict) -> DataFrame:
     this session's catalog has never seen it (the default catalog is
     in-memory and session-scoped - session.py - and the weekly probe's
     normal cadence is repeated short-lived runs, so after a restart the
-    files are all that survives)."""
+    files are all that survives). Mirrors
+    streaming/jobs.py:_resolve_state_table."""
     import os
 
     tname = meta["table"]

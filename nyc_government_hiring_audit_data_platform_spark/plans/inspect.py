@@ -148,6 +148,17 @@ def exchange_blocks(df: DataFrame) -> list[str]:
     ]
 
 
+def analyzed_tree_lines(df: DataFrame) -> int:
+    """Node-line count of the ANALYZED logical plan. A deep composed
+    query whose large mid-pipeline subtree is re-referenced downstream
+    gets that subtree duplicated into every consumer's analyzed tree -
+    the round-6 capstone hit 11.4k nodes and ~20s of flat driver-side
+    planning/codegen per action at EVERY scale. Kept bounded by
+    truncating the lineage of tiny mid-pipeline relations (collected
+    literal relations), and gated by tests so the fix can't regress."""
+    return df._jdf.queryExecution().analyzed().treeString().count("\n")
+
+
 def shuffle_write_bytes(spark) -> int:
     """Cumulative shuffle WRITE bytes across this application's
     completed stages, from the UI's REST API (the stable public surface

@@ -173,13 +173,47 @@ def most_recent_file(
     return max(candidates, key=lambda c: (os.path.getmtime(c), c))
 
 
+def glob_any_store(pattern: str) -> list[str]:
+    """Listing glob for the custom Python DataSources (WARC, MP4):
+    scheme-less patterns use the local glob; URI patterns route through
+    pyarrow's filesystem layer (``s3a://`` normalized to the ``s3://``
+    scheme pyarrow implements natively) - NOT the JVM Hadoop FS,
+    because Spark 4 runs a Python DataSource's ``partitions()`` and
+    stream-offset planning in a separate Python worker process where
+    no SparkSession or Py4J gateway exists. The pattern is a
+    single-directory file glob (``dir/*.warc.gz`` - the crawl-dump
+    layout these sources document); returns sorted URIs so the
+    streaming sources' lexicographic offset contract holds for stores
+    too."""
+    if "://" not in pattern:
+        return sorted(glob.glob(pattern))
+    import fnmatch
+    import posixpath
+
+    from pyarrow import fs as pafs
+
+    scheme, rest = pattern.split("://", 1)
+    uri = "s3://" + rest if scheme == "s3a" else pattern
+    fsys, rel = pafs.FileSystem.from_uri(uri)
+    d, pat = posixpath.split(rel)
+    infos = fsys.get_file_info(pafs.FileSelector(d, allow_not_found=True))
+    return sorted(
+        f"{scheme}://{i.path}"
+        for i in infos
+        if i.type == pafs.FileType.File
+        and fnmatch.fnmatch(posixpath.basename(i.path), pat)
+    )
+
+
 def open_any_store(path: str):
-    """Executor-safe seekable binary open for a Python DataSource's
+    """Executor-safe seekable binary open for the custom DataSources'
     ``read()`` (which runs in Python workers, where no Py4J gateway
     exists - the JVM Hadoop FS is NOT reachable): bare and ``file:``
     paths open locally; other schemes route through pyarrow's
     filesystem layer (``s3a://`` normalized to the ``s3://`` scheme
-    pyarrow implements natively). pyarrow's NativeFile is seekable."""
+    pyarrow implements natively), same normalization as the manifest
+    footer reader (sources/maintenance.py:_open_footer). pyarrow's
+    NativeFile is seekable, which the MP4 moov-only scan requires."""
     if "://" not in path and not path.startswith("file:"):
         # scheme-less local filename: open directly - urlparse would
         # truncate a literal '#' or '?' in the name at the fragment /
@@ -215,8 +249,10 @@ def list_store_data_files(
     spark: SparkSession, path: str, suffix: str = ".parquet"
 ) -> list[tuple[str, int]]:
     """Recursive data-file listing with byte sizes, via the same Hadoop
-    FileSystem API as :func:`list_store_files`, so callers run against
-    ``s3a://``/``hdfs://`` exactly like ``file://``. ``path`` may be a directory, a single
+    FileSystem API as :func:`list_store_files` - the listing layer the
+    maintenance jobs (manifest build, small-file compaction, ANN-index
+    compaction) stand on, so they run against ``s3a://``/``hdfs://``
+    exactly like ``file://``. ``path`` may be a directory, a single
     file, or a glob; directories are walked recursively
     (``FileSystem.listFiles(recursive=True)``) so partitioned or nested
     sink layouts size correctly, and side files Spark's reader skips

@@ -1,35 +1,65 @@
-"""Contract plumbing tests: the registry fits the verifier's
-50-queries-per-round budget, so every query is checked every round, and
-every query is either benchmarked or accounted for."""
+"""Driver-contract plumbing tests: the rotation scheduler that spends
+the driver's ~50-queries-per-round verification budget on the weakest
+signal (failed > never-checked > green least-recently-checked)."""
 
 from __future__ import annotations
 
+import json
+
 import __spark_entry__ as E
 
-# The contract's verifier hash-checks the first 50 declared queries per round.
-VERIFY_BUDGET = 50
+
+def _row(green: bool, err: str | None = None):
+    return {
+        "rows_match": green,
+        "schema_match": green,
+        "hash_match": green,
+        "err": err,
+    }
 
 
-def test_every_query_fits_the_verify_budget_with_an_oracle():
-    """The premise that makes a rotation scheduler unnecessary: the whole
-    registry fits the per-round budget, every query has a DuckDB oracle,
-    and every hiring-audit query in driver_queries_domain is registered."""
-    from nyc_government_hiring_audit_data_platform_spark import (
-        driver_queries_domain as domain,
+def test_driver_history_latest_round_wins(tmp_path):
+    (tmp_path / "CORRECTNESS_r01.json").write_text(
+        json.dumps({"a": _row(True), "b": _row(True)})
     )
+    (tmp_path / "CORRECTNESS_r02.json").write_text(
+        json.dumps({"b": _row(False, "boom"), "c": _row(True)})
+    )
+    hist = E._driver_history(str(tmp_path))
+    assert hist["a"] == (True, 1)
+    assert hist["b"] == (False, 2)  # r2 overrides r1's green
+    assert hist["c"] == (True, 2)
 
-    registry = E.queries()
-    assert len(registry) <= VERIFY_BUDGET, f"{len(registry)} queries > {VERIFY_BUDGET}"
-    assert set(registry) == set(E.oracle_sql()), set(registry) ^ set(E.oracle_sql())
-    domain_fns = [
-        fn
-        for name, fn in vars(domain).items()
-        if name.startswith("q_") and getattr(fn, "__module__", None) == domain.__name__
-    ]
-    assert domain_fns, "no driver_queries_domain queries found"
-    registered = list(registry.values())
-    missing = [fn.__name__ for fn in domain_fns if fn not in registered]
-    assert not missing, f"driver_queries_domain queries not registered: {missing}"
+
+def test_driver_history_no_oracle_counts_as_red(tmp_path):
+    """Round-2 lesson: err='no_oracle' is a FAILED row, not a skip."""
+    (tmp_path / "CORRECTNESS_r02.json").write_text(
+        json.dumps({"x": {"rows_match": None, "err": "no_oracle", "spark_rows": 5}})
+    )
+    hist = E._driver_history(str(tmp_path))
+    assert hist["x"] == (False, 2)
+
+
+def test_queries_orders_weakest_signal_first():
+    """Against the repo's real CORRECTNESS history: every query that
+    failed its latest check must come before every never-checked query,
+    which must come before every green one."""
+    hist = E._driver_history()
+    names = list(E.queries())
+
+    def tier(n):
+        if n in E.REWRITTEN:
+            return -1  # stale-green rewrite pin (see __spark_entry__)
+        if n in hist and not hist[n][0]:
+            return 0
+        if n not in hist:
+            return 1
+        return 2
+
+    tiers = [tier(n) for n in names]
+    assert tiers == sorted(tiers), "rotation tiers out of order"
+    # sanity: the dict covers every registered query exactly once
+    assert len(names) == len(set(names)) == len(E.oracle_sql())
 
 
 def test_bench_accounts_for_every_query():
@@ -63,3 +93,13 @@ def test_bench_accounts_for_every_query():
     )
     stale = registry - declared
     assert not stale, f"BENCH.md rows for unknown queries: {sorted(stale)}"
+
+
+def test_rewritten_pins_are_live_query_names():
+    """A REWRITTEN pin that no longer names a real query silently
+    wastes head-of-rotation budget slots forever (the prio function
+    only consults the set for names that exist, but a typo'd pin would
+    never be noticed) - assert the set stays a subset of the registry."""
+    from nyc_government_hiring_audit_data_platform_spark import driver_queries as DQ
+
+    assert E.REWRITTEN <= set(DQ.QUERIES), E.REWRITTEN - set(DQ.QUERIES)

@@ -53,3 +53,15 @@ def test_normalize_event_ts_all_vintages(spark, tmp_path, arrow_type):
     assert got == {1: TS[0], 2: TS[1], 3: TS[2]}
 
 
+def test_streaming_reader_probes_schema(spark, tmp_path):
+    """read_events_stream must pin the PROBED schema, not a hard-coded
+    physical type, for whichever vintage is on disk."""
+    from nyc_government_hiring_audit_data_platform_spark.streaming import jobs as SJ
+
+    d = tmp_path / "events_dir"
+    d.mkdir()
+    _write(d, "part-0.parquet", pa.timestamp("us"))
+    stream = SJ.read_events_stream(spark, str(d))
+    assert isinstance(stream.schema["ts"].dataType, TimestampType)
+    batch = SJ.read_events_batch(spark, str(d))
+    assert sorted(r["ts"] for r in batch.collect()) == sorted(TS)

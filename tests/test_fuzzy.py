@@ -828,7 +828,8 @@ def test_incremental_match_union_equals_full_rematch(spark):
 def test_incremental_probe_never_rescans_stable_side(spark, tmp_path):
     """The incremental contract at the plan level: a delta probe reads
     the INDEX files and the delta - the stable side's source path must
-    not appear in the probe's plan."""
+    not appear in the probe's plan (the dedup band-index contract,
+    test_incremental_probe_never_shuffles_the_index's sibling)."""
     from nyc_government_hiring_audit_data_platform_spark.operators import fuzzy as FZ
 
     pay_path = str(tmp_path / "payroll_src")

@@ -1,6 +1,8 @@
 """Incremental aggregate maintenance (operators/incremental.py).
 
-These tests pin the operator contracts: merge-order invariance, the min/max
+The driver rows (driver_queries_incremental.py) hash the end-to-end
+algebra against DuckDB full recomputes; these tests pin the operator
+contracts the hashes cannot see: merge-order invariance, the min/max
 retraction refusal, zombie-group dropping, the state-column contract,
 and the plan-level guarantee that a refresh never re-reads base facts.
 """

@@ -563,6 +563,62 @@ def test_concurrent_contention_yields_exactly_one_holder(tmp_path):
         assert [x for x in os.listdir(d) if x != "_lifecycle_lease.json"] == []
 
 
+def test_takeover_never_renames_a_peers_fresh_lease(tmp_path, monkeypatch):
+    """A contender that judged the OLD incarnation stale while a peer's
+    takeover completed (and the peer linked a fresh lease) must re-judge
+    under the takeover lock and refuse - renaming the fresh lease away
+    opened a gap where a third contender could claim too (two holders).
+    A held takeover lock refuses; a dead one is swept after stale_after."""
+    import os
+
+    d = str(tmp_path / "idx")
+    os.makedirs(d)
+    path = os.path.join(d, "_lifecycle_lease.json")
+    lock = path + ".takeover.lock"
+    old = time.time() - 7200
+
+    def plant_stale():
+        with open(path, "w") as f:
+            json.dump({"owner": "dead", "step": "crashed", "pid": 0}, f)
+        os.utime(path, (old, old))
+
+    plant_stale()
+    real_open = os.open
+
+    def peer_wins_first(p, *a, **k):
+        if p == lock:  # the peer's whole takeover lands before ours
+            os.remove(path)
+            with open(path, "w") as f:
+                json.dump({"owner": "peer", "step": "peer_run", "pid": 0}, f)
+        return real_open(p, *a, **k)
+
+    def no_rename(src, dst):
+        raise AssertionError(f"takeover renamed {src}")
+
+    monkeypatch.setattr(os, "open", peer_wins_first)
+    monkeypatch.setattr(os, "rename", no_rename)
+    with pytest.raises(LS.LeaseHeldError, match="peer_run"):
+        with LS.lifecycle_lease(d, "late", stale_after=60):
+            pass
+    monkeypatch.undo()
+    with open(path) as f:
+        assert json.load(f)["owner"] == "peer"
+    assert sorted(os.listdir(d)) == ["_lifecycle_lease.json"]
+
+    # a live takeover lock: refuse rather than race it
+    plant_stale()
+    open(lock, "w").close()
+    with pytest.raises(LS.LeaseHeldError, match="takeover"):
+        with LS.lifecycle_lease(d, "late", stale_after=60):
+            pass
+    # its holder died: the entry sweep clears it and the takeover runs
+    os.utime(lock, (old, old))
+    with LS.lifecycle_lease(d, "late", stale_after=60) as lease:
+        with open(path) as f:
+            assert json.load(f)["owner"] == lease.owner
+    assert os.listdir(d) == []
+
+
 def test_stale_lease_never_wedges_the_cadence(spark, tmp_path):
     """Crash-then-takeover end to end: a sink dies holding the lease
     (simulated by a backdated lease file); the next scheduled run takes

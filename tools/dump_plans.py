@@ -53,10 +53,61 @@ SHOWCASE = {
         "under a shuffle join the hot key's single task parallelizes "
         "7.9x with bit-identical output (SCALING.md r9)."
     ),
+    "minhash_lsh_split": (
+        "Grid-split self-join (Okcan-Riedewald matrix partitioning): "
+        "hot LSH buckets spread their in-bucket enumeration over G x G "
+        "join cells - output bit-identical, and the one-task memory "
+        "cliff (measured executor OOM at a 10k clique) becomes 64 "
+        "bounded cells (SCALING.md r9)."
+    ),
+    "tfidf_top_terms": (
+        "Word-count shape: explode then partial-aggregated shuffles on "
+        "(doc,term)/term; corpus size joins back as a 1-row broadcast; "
+        "top-3 per doc is WindowGroupLimit."
+    ),
+    "ann_ivf_topk": (
+        "IVF probe is an equi-join on cluster id with the tiny probe "
+        "side broadcast - the corpus never moves; candidates are "
+        "~nprobe/16 of the corpus."
+    ),
+    "kmeans_iteration": (
+        "Iterative-algorithm building block: assignment is map-side, "
+        "the only data-size shuffle is a partial-aggregated "
+        "groupBy(cluster, dim) - 100 TB reduces to 16x64 rows."
+    ),
+    "benchmark_contamination": (
+        "Bounded-side broadcast: the held-out gram set (benchmark-sized, "
+        "not corpus-sized) broadcasts; the corpus side is one explode + "
+        "equi-join + partial-agg count - linear in corpus bytes."
+    ),
+    "pack_sequences": (
+        "Parallel running-sum window: one hash exchange on the pack "
+        "partition key (source), streaming frame within each - no "
+        "single-partition global window at any scale."
+    ),
+    "pii_redaction": (
+        "Stateless map-only redaction: regex chains stay in the "
+        "projection over the scan - no shuffle, composes with scan "
+        "pruning and predicate pushdown."
+    ),
+    "deterministic_sample": (
+        "Hash sampling is a stateless map filter: zero shuffles, "
+        "composes with scan pruning, stable under task retry."
+    ),
+    "interval_overlap_join": (
+        "Temporal overlap join as grid-cell blocking: intervals explode "
+        "into hour cells, candidates come from an equi-join on cell, the "
+        "exact predicate verifies - never a quadratic theta join."
+    ),
     "gold_salary_matches_unique": (
         "Two-level MAX aggregation: partial MAX keyed by (title, date "
         "pair) so the heavy duration parse chain evaluates once per "
         "distinct key on the small intermediate, then final MAX by title."
+    ),
+    "funnel_conversion": (
+        "Ordered funnel as three per-user aggregates + time-filtered "
+        "equi-joins - no Window over the whole event log; AQE picks the "
+        "join strategy for the user-dimension tables."
     ),
     "fuzzy_incremental_union": (
         "Incremental weekly re-match: the prior batch's one-shot chain "
@@ -87,6 +138,203 @@ SHOWCASE = {
         "The published fuzzy scorer runs as ONE ArrowEvalPython node "
         "over the blocked pair set - Python touches candidates only, "
         "batched via Arrow; everything else is JVM projection."
+    ),
+    "boilerplate_ngram_flags": (
+        "Boilerplate removal: gram-grouped distinct-doc count with "
+        "partial agg, then the HAVING-filtered (repetition-bounded) "
+        "gram set joins back - AQE broadcasts it when it fits; the "
+        "drop ratio is one int/int division per doc."
+    ),
+    "hard_negative_mining": (
+        "Contrastive hard negatives: the fixed anchor panel broadcasts "
+        "(corpus never shuffles to score), per-anchor top-5 compiles "
+        "to WindowGroupLimit so only 5 rows per anchor move."
+    ),
+    "snapshot_diff": (
+        "Dataset-version diff: ONE full-outer key join; the unchanged "
+        "majority is filtered before anything aggregates, so output "
+        "is proportional to churn. Bucketed snapshots make it "
+        "shuffle-free."
+    ),
+    "pagerank_iteration": (
+        "One pregel step = out-degree agg + gather join/agg, all keyed "
+        "shuffles; contributions are integerized so the sum is exact "
+        "at any partitioning."
+    ),
+    "curation_keep_decisions": (
+        "The composite filter stack evaluates boilerplate + surprisal "
+        "+ length rules in ONE plan: rules are columns assembled by "
+        "doc-keyed joins, not extra corpus passes."
+    ),
+    "epoch_shuffle": (
+        "Distributed global ranking: rank within 16 key-prefix shards "
+        "(parallel windows) + tiny prefix-sum offsets - provably equal "
+        "to one global ORDER BY, with no single-partition window."
+    ),
+    "quantile_bucketize": (
+        "Exact discrete decile edges WITHOUT a single-reducer percentile "
+        "buffer: shard-prefix distributed rank picks the values at ranks "
+        "ceil(q*n); a broadcast 9-value edge array then assigns buckets "
+        "map-side (the MLlib-Bucketizer shape, no global ntile sort)."
+    ),
+    "bfs_distance": (
+        "Pregel iteration: each hop is ONE frontier equi-join + ONE "
+        "groupBy(node) MIN; the distance table never exceeds |V| rows "
+        "and no path set is materialized (the oracle's recursive CTE "
+        "does - exactly what cannot run at scale)."
+    ),
+    "null_safe_join": (
+        "EqualNullSafe (<=>) keeps the HASH join: NULL keys match "
+        "NULL keys without falling back to a nested loop."
+    ),
+    "forward_fill": (
+        "LOCF imputation in one user-partitioned window exchange that "
+        "the downstream projection reuses - per-task state is one "
+        "user's history."
+    ),
+    "gopher_quality_flags": (
+        "Published rule filter as a single map-only projection: zero "
+        "Exchange nodes, one WholeStageCodegen span over the scan - "
+        "the 100 TB plan IS the sf0.01 plan."
+    ),
+    "dsir_importance_weights": (
+        "DSIR importance weights: the hashed-feature model collapses "
+        "to a FIXED 4096-row relation at any corpus size, broadcast "
+        "back onto doc-bucket term frequencies; only doc-keyed "
+        "shuffles scale with data."
+    ),
+    "ccnet_perplexity_buckets": (
+        "Per-language tertile bucketing: vocabulary-sized model and a "
+        "languages x 2 edge relation broadcast; the head/middle/tail "
+        "assignment itself is map-side."
+    ),
+    "vocab_coverage": (
+        "Frequency-ranked vocabulary WITHOUT a single-partition window: "
+        "shard-prefix distributed rank over (-count, term-prefix) shards "
+        "computes rank AND cumulative share in one parallel Window node; "
+        "the only deliberate single-partition pass is over the tiny "
+        "shard-totals relation."
+    ),
+    "semdedup_prune": (
+        "SemDeDup: centroid assignment is map-side; the quadratic cosine "
+        "stage is an equi-join ON CLUSTER ID so pairwise work is bounded "
+        "per cluster; the assigned relation persists once for both join "
+        "sides and the final projection."
+    ),
+    "duplicate_span_detect": (
+        "Stride-1 span dedup: md5 span hashes (not span text) shuffle to "
+        "a span-grouped count, join back, and the islands window is "
+        "partitioned BY DOC - every stage key-grouped, volume linear in "
+        "tokens."
+    ),
+    "winnowing_fingerprints": (
+        "Winnowing is map-ONLY: positional gram hashes, per-window "
+        "minima, and the distinct fingerprint set are all per-document "
+        "array expressions - zero Exchange nodes at any corpus size."
+    ),
+    "cms_frequency_bound": (
+        "Count-Min sketch built from the term-count relation: after the "
+        "word-count shuffle, everything is fixed-size (D*W cells, k*D "
+        "probe rows) and broadcast-joined."
+    ),
+    "incremental_neardup_batch": (
+        "Incremental dedup: the corpus participates only through its "
+        "band index; the batch hashes/bands map-side and probes via a "
+        "(band, bh) equi-join - cost proportional to the batch."
+    ),
+    "incremental_agg_refresh": (
+        "IVM refresh: each delta batch aggregates to group-sized "
+        "partials, then the union+re-merge touches only state rows - "
+        "the plan contains the state and delta relations, never the "
+        "fact history (plan-asserted in tests)."
+    ),
+    "incremental_refresh_joined": (
+        "Join-shaped IVM merge: state and delta partials combine "
+        "column-wise through a FullOuter join, so a state table "
+        "bucketed on the group keys participates with NO Exchange - "
+        "the big relation of a production refresh never shuffles."
+    ),
+    "stupid_backoff_score": (
+        "Distributed LM scoring: the vocabulary-bounded unigram/bigram "
+        "tables join the corpus positions by key (broadcast when they "
+        "fit, keyed shuffle otherwise); per-position FLOOR micro-nats "
+        "make the doc sums exact integers in any partition order."
+    ),
+    "per_source_quota_sample": (
+        "Per-domain cap: rank<=K in md5-hash order compiles to "
+        "WindowGroupLimit - only K rows per source leave the map side."
+    ),
+    "distinct_ngram_diversity": (
+        "COUNT(DISTINCT) rewritten two-level: the (source, gram) "
+        "shuffle collapses map-side and only per-source rows reach the "
+        "final aggregate."
+    ),
+    "duplicate_span_removal": (
+        "Exact-substring removal: span hashes (not text) shuffle to one "
+        "(count, canonical-occurrence) aggregate; the strike set and the "
+        "token re-join are doc-keyed - the cleaned corpus ships without "
+        "anything quadratic."
+    ),
+    "minhash_lsh_recall": (
+        "Quality gate: the exact lane is the sampled ground-truth "
+        "quadratic, the LSH lane the linear banded chain; both persist "
+        "once and the verdict is two counts + one equi-join."
+    ),
+    "bloom_membership_gate": (
+        "Constant-memory membership: the corpus folds map-side into ONE "
+        "2048-word bitmap row; the probe side is a map-only forall "
+        "against that single broadcast row - no shuffle grows with the "
+        "seen-corpus size."
+    ),
+    "corpus_mix_plan": (
+        "Capstone funnel: seven stages composed in one plan (incl. the "
+        "domain reputation gate as a broadcast semi-join against a "
+        "driver-synced keep-list) - every stage doc- or span-keyed, the "
+        "final weight normalization a one-row broadcast; the funnel "
+        "counts ride the same pass."
+    ),
+    "ann_ivfadc_topk": (
+        "Composed index: IVF coarse probe restricts candidates BEFORE "
+        "the PQ-ADC compressed-domain scoring join; raw vectors are "
+        "dropped map-side (8-byte codes ship instead), queries broadcast."
+    ),
+    "ann_ivfadc_residual_topk": (
+        "The Jegou §V deployed form: two relational Lloyd passes train "
+        "the coarse quantizer (map-side argmin fold + (cluster, dim)-"
+        "keyed agg, no driver sync), PQ codes quantize residuals, per-"
+        "probe LUTs broadcast - ZERO vector-carrying exchanges anywhere."
+    ),
+    "corpus_mix_plan_staged": (
+        "The capstone in production shape: dedup survivors and source "
+        "reputation MATERIALIZE as parquet tables between phases and "
+        "read back as leaf nodes - shallow analyzed tree by "
+        "construction, keep-list as a broadcast subtree over the leaf, "
+        "restartable at phase granularity; hash-equal to the composed "
+        "twin at both SFs."
+    ),
+    "containment_neardup": (
+        "Prefix filtering: only each doc's rarest-df prefix joins the "
+        "inverted index, so the candidate join is bounded by rare "
+        "postings; the exact intersect runs on candidates only - row "
+        "volumes measured exactly linear to x100 (SCALING.md)."
+    ),
+    "kmv_source_novelty": (
+        "Sketch-side novelty: corpus contributes one WindowGroupLimit "
+        "bottom-K pass; the leave-one-out containment runs on sources^2 "
+        "x K sketch rows with min-of-maxes tau - the corpus is never "
+        "self-joined (the exact lane is the audit harness)."
+    ),
+    "quality_classifier_scores": (
+        "Pretrained-model apply: one doc x bucket partial-agg shuffle; "
+        "the 1024-row weight relation broadcasts; swapping in real "
+        "trained weights changes the model source, not the plan."
+    ),
+    "ann_ivfadc_rerank_topk": (
+        "The deployed ANN stack end-to-end (Jegou §V-C): residual-ADC "
+        "shortlist in the compressed domain, then the bounded shortlist "
+        "BROADCASTS for its raw-vector fetch (BroadcastHashJoin on id - "
+        "the corpus never shuffles) and an exact squared-L2 rerank "
+        "confines quantization error to shortlist membership."
     ),
 }
 
