@@ -35,14 +35,25 @@ the same candidate pairs (identical published algorithm, C++ kernel,
 
 from __future__ import annotations
 
+import hashlib
+import json
+import math
+import os
 import re
+import shutil
+from typing import Callable, NamedTuple
 
 import pandas as pd
+import pyarrow.parquet as pq
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, IntegerType
 
+from nyc_government_hiring_audit_data_platform_spark import lease as LS
+from nyc_government_hiring_audit_data_platform_spark.functions.similarity import (
+    levenshtein_similarity,
+)
 from nyc_government_hiring_audit_data_platform_spark.functions.text import (
     normalize_text,
     tokens,
@@ -215,20 +226,18 @@ def _cap_block_occupancy(
 
 
 def _salt_hot_blocks(
-    le: DataFrame,
-    re_: DataFrame,
-    l_tok: str,
-    r_tok: str,
-    l_hash_cols: list[str],
+    lane: _Lane,
+    probe: DataFrame,
+    index: DataFrame,
     salt_buckets: int,
     hot_occupancy: int,
 ) -> tuple[DataFrame, DataFrame]:
-    """Lossless hot-key parallelization shared by both blocking paths
-    (SCALING.md r9 finding 4): blocking keys whose occupancy exceeds
+    """Lossless hot-key parallelization shared by both lanes (SCALING.md
+    r9 finding 4): blocking keys whose occupancy exceeds
     ``hot_occupancy`` on EITHER side (two map-side-combined counts,
-    union, broadcast back) get the LEFT rows hash-salted into
-    ``salt_buckets`` buckets and the RIGHT rows replicated once per
-    bucket; all other keys keep salt 0 with no replication. Each
+    union, broadcast back) get the probe (LEFT) rows hash-salted into
+    ``salt_buckets`` buckets and the index (RIGHT) rows replicated once
+    per bucket; all other keys keep salt 0 with no replication. Each
     original (left, right) meeting happens in exactly ONE bucket, so
     joining on (key, salt) instead of (key) is output-identical - but
     a hot key's enumeration, which serializes into one task under a
@@ -237,36 +246,35 @@ def _salt_hot_blocks(
     right side is still a single-task straggler (|L_key| * |R_key|
     rows in one partition), and salting-left/replicating-right fixes
     it at the cost of replicating only the COLD side. Returns the two
-    sides each carrying a ``salt`` column; the caller adds salt
-    equality to its join."""
-    hot = (
-        re_.groupBy(r_tok)
-        .agg(F.count(F.lit(1)).alias("_occ"))
-        .filter(F.col("_occ") > hot_occupancy)
-        .select(F.col(r_tok).alias("_hot_tok"))
-        .union(
-            le.groupBy(l_tok)
+    sides each carrying a ``salt`` column; the lane's pair function
+    joins on it when called with ``salted=True``."""
+
+    def hot_keys(side: DataFrame, key: str) -> DataFrame:
+        return (
+            side.groupBy(key)
             .agg(F.count(F.lit(1)).alias("_occ"))
             .filter(F.col("_occ") > hot_occupancy)
-            .select(F.col(l_tok).alias("_hot_tok"))
+            .select(F.col(key).alias("_hot_tok"))
         )
+
+    hot = F.broadcast(
+        hot_keys(index, lane.key)
+        .union(hot_keys(probe, lane.probe_key))
         .distinct()
     )
-    le2 = le.join(
-        F.broadcast(hot), F.col(l_tok) == F.col("_hot_tok"), "left"
+    probe2 = probe.join(
+        hot, F.col(lane.probe_key) == F.col("_hot_tok"), "left"
     ).select(
-        *le.columns,
+        *probe.columns,
         F.when(
             F.col("_hot_tok").isNotNull(),
-            F.pmod(F.hash(*l_hash_cols), F.lit(salt_buckets)),
+            F.pmod(F.hash(f"left_{lane.form}", "left_title"), F.lit(salt_buckets)),
         )
         .otherwise(F.lit(0))
         .alias("salt"),
     )
-    re2 = re_.join(
-        F.broadcast(hot), F.col(r_tok) == F.col("_hot_tok"), "left"
-    ).select(
-        *re_.columns,
+    index2 = index.join(hot, F.col(lane.key) == F.col("_hot_tok"), "left").select(
+        *index.columns,
         F.explode(
             F.when(
                 F.col("_hot_tok").isNotNull(),
@@ -274,18 +282,201 @@ def _salt_hot_blocks(
             ).otherwise(F.array(F.lit(0)))
         ).alias("salt"),
     )
-    return le2, re2
+    return probe2, index2
 
 
 def _blocking_keys(norm: Column) -> Column:
-    """The WRatio lane's blocking-key set for one normalized title:
-    whole tokens ∪ character 4-grams (see fuzzy_title_pairs for why
-    both classes are needed). Shared by the one-shot join and the
-    persisted-index incremental path so the two candidate sets are the
-    same by construction."""
+    """The WRatio lane's form -> blocking-keys map: whole tokens ∪
+    character 4-grams of one normalized title (see fuzzy_title_pairs
+    for why both classes are needed). Held in the lane record
+    (``_WRATIO.to_keys``), so the one-shot join, the index build and
+    the index probe explode titles through this one definition."""
     toks = tokens(norm)
     grams = char_shingles(norm, 4)
     return F.array_distinct(F.concat(toks, grams))
+
+
+def token_sort_key(col: Column | str) -> Column:
+    """Normalized, token-sorted form of a title: the string both sides of
+    the token-sort scorer compare (fuzzywuzzy token_sort_ratio's
+    "sorted join"). DuckDB twin: array_to_string(list_sort(list_filter(
+    string_split(norm, ' '), t -> t <> '')), ' ')."""
+    return F.concat_ws(" ", F.array_sort(tokens(col)))
+
+
+def _wratio_pairs(
+    probe: DataFrame,
+    index: DataFrame,
+    prefilter_cutoff: int,
+    score_cutoff: int,
+    salted: bool = False,
+) -> DataFrame:
+    """The WRatio lane's pair function: blocking-key equi-join of an
+    exploded probe side against an index (plus the salt when
+    ``salted``), pair distinct, then the two scoring stages. Returns
+    (left_title, right_title, left_norm, right_norm, score)."""
+    cand = (
+        probe.join(index, ["blk", "salt"] if salted else ["blk"])
+        .select("left_title", "left_norm", "right_title", "right_norm")
+        .distinct()
+    )
+    stage1 = cand.withColumn(
+        "ts_ratio", token_set_ratio_udf(F.col("left_norm"), F.col("right_norm"))
+    ).filter(F.col("ts_ratio") >= prefilter_cutoff)
+    # stage-1 int rounding above matches the reference's uint8 cdist;
+    # stage 2 compares the UNROUNDED float WRatio (reference :136-140)
+    # and rounds only the emitted score (stored as uint8 there).
+    stage2 = stage1.withColumn(
+        "score_f", wratio_udf(F.col("left_norm"), F.col("right_norm"))
+    ).filter(F.col("score_f") >= score_cutoff)
+    return stage2.select(
+        "left_title",
+        "right_title",
+        "left_norm",
+        "right_norm",
+        F.round("score_f").cast("int").alias("score"),
+    )
+
+
+def _tokensort_pairs(
+    probe: DataFrame,
+    index: DataFrame,
+    min_shared_tokens: int,
+    score_cutoff: int,
+    salted: bool = False,
+) -> DataFrame:
+    """The tokensort lane's pair function: token equi-join with the
+    lossless length bound riding in the join condition (plus the salt
+    when ``salted``), shared-token count >= ``min_shared_tokens``, then
+    the levenshtein stage. Returns (left_title, right_title, score)."""
+    # lossless length bound: lev >= |dlen|, so sim >= cutoff caps |dlen|
+    cond = (F.col("ltok") == F.col("tok")) & (
+        F.abs(F.length("left_key") - F.length("right_key"))
+        <= (F.lit(100 - score_cutoff) / F.lit(100.0))
+        * F.greatest(F.length("left_key"), F.length("right_key"))
+    )
+    if salted:
+        cond = cond & (probe["salt"] == index["salt"])
+    cand = (
+        probe.join(index, cond)
+        .groupBy("left_title", "left_key", "right_title", "right_key")
+        .agg(F.count(F.lit(1)).alias("n_shared"))
+        .filter(F.col("n_shared") >= min_shared_tokens)
+    )
+    sim = levenshtein_similarity(F.col("left_key"), F.col("right_key"))
+    return cand.filter(sim >= score_cutoff).select(
+        "left_title", "right_title", F.round(sim).cast("int").alias("score")
+    )
+
+
+class _Lane(NamedTuple):
+    """One fuzzy lane's index layout, defined once. An exploded side
+    has one row per (blocking key, title): the index side's key column
+    is ``key`` next to ``right_title`` and ``right_{form}``; a probe
+    side's is ``probe_key`` next to ``left_title`` and ``left_{form}``.
+    ``to_form`` maps a title to the comparison form both scorers read,
+    ``to_keys`` maps that form to its blocking keys, and ``pairs`` is
+    the lane's candidate + scoring function (probe, index, prefilter,
+    score cutoff, salted)."""
+
+    key: str
+    probe_key: str
+    form: str
+    to_form: Callable[[Column], Column]
+    to_keys: Callable[[Column], Column]
+    pairs: Callable[..., DataFrame]
+
+
+_WRATIO = _Lane("blk", "blk", "norm", normalize_text, _blocking_keys, _wratio_pairs)
+_TOKENSORT = _Lane(
+    "tok", "ltok", "key", token_sort_key,
+    lambda key: F.array_distinct(F.split(key, " ")), _tokensort_pairs,
+)
+
+
+def _lane_of(index: DataFrame) -> _Lane:
+    """The lane a title index was built for, read from its key column
+    (``blk`` = WRatio, ``tok`` = tokensort)."""
+    for lane in (_WRATIO, _TOKENSORT):
+        if lane.key in index.columns:
+            return lane
+    raise ValueError(
+        f"unrecognized title-index layout {index.columns}; expected a "
+        "blk (WRatio) or tok (tokensort) blocking-key column"
+    )
+
+
+def _exploded_titles(
+    lane: _Lane,
+    df: DataFrame,
+    col: str,
+    side: str,
+    max_block: int | None = None,
+) -> DataFrame:
+    """The distinct non-null titles of ``df[col]``, put in the lane's
+    comparison form and exploded into one row per blocking key.
+    ``side="right"`` gives the index layout (key, right_title,
+    right_{form}); ``side="left"`` gives a probe side under the lane's
+    probe key. ``max_block`` keeps each key's lowest-(form, title)
+    members (:func:`_cap_block_occupancy`)."""
+    title, form = f"{side}_title", f"{side}_{lane.form}"
+    key = lane.key if side == "right" else lane.probe_key
+    out = (
+        df.select(F.col(col).alias(title))
+        .where(F.col(title).isNotNull())
+        .distinct()
+        .withColumn(form, lane.to_form(F.col(title)))
+        .select(F.explode(lane.to_keys(F.col(form))).alias(key), title, form)
+    )
+    if max_block is not None:
+        out = _cap_block_occupancy(out, key, [form, title], max_block)
+    return out
+
+
+def _one_shot_pairs(
+    lane: _Lane,
+    left: DataFrame,
+    right: DataFrame,
+    left_col: str,
+    right_col: str,
+    prefilter: int,
+    score_cutoff: int,
+    max_block: int | None,
+    salt_buckets: int | None,
+    hot_occupancy: int,
+) -> DataFrame:
+    """A one-shot join is an index probe: the left side exploded, the
+    right side built as its index (both capped at ``max_block``), hot
+    keys optionally salted, then the lane's pair function."""
+    probe = _exploded_titles(lane, left, left_col, "left", max_block)
+    index = _exploded_titles(lane, right, right_col, "right", max_block)
+    salted = salt_buckets is not None and salt_buckets > 1
+    if salted:
+        probe, index = _salt_hot_blocks(
+            lane, probe, index, salt_buckets, hot_occupancy
+        )
+    return lane.pairs(probe, index, prefilter, score_cutoff, salted)
+
+
+def reattach_title_pairs(
+    left: DataFrame,
+    right: DataFrame,
+    left_col: str,
+    right_col: str,
+    pairs: DataFrame,
+) -> DataFrame:
+    """Full rows for scored title pairs: every left row whose
+    ``left_col`` is a pair's left_title, joined to every right row
+    whose ``right_col`` is its right_title, plus the pair's ``score``.
+    Two equi-joins on the title with NO broadcast hint on the pair
+    table (AQE decides from its runtime size, see :func:`fuzzy_join`).
+    Shared by both one-shot joins and the incremental salary match."""
+    p = pairs.select("left_title", "right_title", "score")
+    return (
+        left.join(p, left[left_col] == p["left_title"])
+        .join(right, p["right_title"] == right[right_col])
+        .drop("left_title", "right_title")
+    )
 
 
 def fuzzy_title_pairs(
@@ -305,7 +496,9 @@ def fuzzy_title_pairs(
     every distinct title pair with token_set_ratio >= prefilter_cutoff
     (stage 1, reference: src/fuzzy_match_salary.py:119-126) and
     WRatio >= score_cutoff (stage 2, reference: :132-140). ``score`` is
-    the WRatio, as in the reference (:140).
+    the WRatio, as in the reference (:140). Computed as a probe of the
+    right side's :func:`build_fuzzy_title_index` - the same candidate
+    and scoring code as :func:`incremental_fuzzy_pairs`.
 
     Candidates come from the UNION of two equi-join blockings over the
     normalized titles: shared whole token, and shared character 4-gram.
@@ -338,75 +531,10 @@ def fuzzy_title_pairs(
     buckets with bit-identical output; same trade table as the
     tokensort path (SCALING.md r9: planner broadcast / salt / cap).
     """
-    lt = (
-        left.select(F.col(left_col).alias("left_title"))
-        .where(F.col(left_col).isNotNull())
-        .distinct()
-        .withColumn("left_norm", normalize_text(F.col("left_title")))
+    return _one_shot_pairs(
+        _WRATIO, left, right, left_col, right_col, prefilter_cutoff,
+        score_cutoff, max_block, salt_buckets, hot_occupancy,
     )
-    rt = (
-        right.select(F.col(right_col).alias("right_title"))
-        .where(F.col(right_col).isNotNull())
-        .distinct()
-        .withColumn("right_norm", normalize_text(F.col("right_title")))
-    )
-
-    le = lt.select(
-        "left_title", "left_norm",
-        F.explode(_blocking_keys(F.col("left_norm"))).alias("blk"),
-    )
-    re_ = rt.select(
-        "right_title", "right_norm",
-        F.explode(_blocking_keys(F.col("right_norm"))).alias("blk"),
-    )
-    if max_block is not None:
-        le = _cap_block_occupancy(le, "blk", ["left_norm", "left_title"], max_block)
-        re_ = _cap_block_occupancy(re_, "blk", ["right_norm", "right_title"], max_block)
-    join_keys = ["blk"]
-    if salt_buckets is not None and salt_buckets > 1:
-        le, re_ = _salt_hot_blocks(
-            le, re_, "blk", "blk", ["left_norm", "left_title"],
-            salt_buckets, hot_occupancy,
-        )
-        join_keys = ["blk", "salt"]
-    cand = (
-        le.join(re_, join_keys)
-        .select("left_title", "left_norm", "right_title", "right_norm")
-        .distinct()
-    )
-    return _score_candidate_pairs(cand, prefilter_cutoff, score_cutoff)
-
-
-def _score_candidate_pairs(
-    cand: DataFrame, prefilter_cutoff: int, score_cutoff: int
-) -> DataFrame:
-    """The WRatio lane's two scoring stages over a candidate pair set
-    (shared by the one-shot join and the incremental index probe, so
-    the scored output is the same function of the candidates)."""
-    stage1 = cand.withColumn(
-        "ts_ratio", token_set_ratio_udf(F.col("left_norm"), F.col("right_norm"))
-    ).filter(F.col("ts_ratio") >= prefilter_cutoff)
-    # stage-1 int rounding above matches the reference's uint8 cdist;
-    # stage 2 compares the UNROUNDED float WRatio (reference :136-140)
-    # and rounds only the emitted score (stored as uint8 there).
-    stage2 = stage1.withColumn(
-        "score_f", wratio_udf(F.col("left_norm"), F.col("right_norm"))
-    ).filter(F.col("score_f") >= score_cutoff)
-    return stage2.select(
-        "left_title",
-        "right_title",
-        "left_norm",
-        "right_norm",
-        F.round("score_f").cast("int").alias("score"),
-    )
-
-
-def token_sort_key(col: Column | str) -> Column:
-    """Normalized, token-sorted form of a title: the string both sides of
-    the token-sort scorer compare (fuzzywuzzy token_sort_ratio's
-    "sorted join"). DuckDB twin: array_to_string(list_sort(list_filter(
-    string_split(norm, ' '), t -> t <> '')), ' ')."""
-    return F.concat_ws(" ", F.array_sort(tokens(col)))
 
 
 def fuzzy_title_pairs_tokensort(
@@ -427,6 +555,9 @@ def fuzzy_title_pairs_tokensort(
     built-ins, so the identical computation runs in DuckDB SQL - this is
     the scorer the driver hash-verifies; rapidfuzz-parity for the
     published WRatio algorithm stays pinned in tests/test_fuzzy.py.
+    Computed as a probe of the right side's
+    :func:`build_tokensort_title_index` - the same candidate and
+    scoring code as :func:`incremental_fuzzy_pairs_tokensort`.
 
     Stage 1 (prefilter): candidate pairs must share >= min_shared_tokens
     distinct normalized tokens - an explode + equi-join + count, i.e. a
@@ -493,77 +624,9 @@ def fuzzy_title_pairs_tokensort(
 
     Returns (left_title, right_title, score int).
     """
-    lt = (
-        left.select(F.col(left_col).alias("left_title"))
-        .where(F.col(left_col).isNotNull())
-        .distinct()
-        .withColumn("left_key", token_sort_key(F.col("left_title")))
-    )
-    rt = (
-        right.select(F.col(right_col).alias("right_title"))
-        .where(F.col(right_col).isNotNull())
-        .distinct()
-        .withColumn("right_key", token_sort_key(F.col("right_title")))
-    )
-    le = lt.select(
-        "left_title",
-        "left_key",
-        F.explode(F.array_distinct(F.split("left_key", " "))).alias("tok"),
-    )
-    re_ = rt.select(
-        "right_title",
-        "right_key",
-        F.explode(F.array_distinct(F.split("right_key", " "))).alias("rtok"),
-    )
-    if max_block is not None:
-        le = _cap_block_occupancy(le, "tok", ["left_key", "left_title"], max_block)
-        re_ = _cap_block_occupancy(re_, "rtok", ["right_key", "right_title"], max_block)
-    # lossless length bound: lev >= |dlen|, so sim >= cutoff caps |dlen|
-    len_ok = (
-        F.abs(F.length("left_key") - F.length("right_key"))
-        <= (F.lit(100 - score_cutoff) / F.lit(100.0))
-        * F.greatest(F.length("left_key"), F.length("right_key"))
-    )
-    if salt_buckets is not None and salt_buckets > 1:
-        # lossless hot-key parallelization: salt left, replicate right
-        le, re_ = _salt_hot_blocks(
-            le, re_, "tok", "rtok", ["left_key", "left_title"],
-            salt_buckets, hot_occupancy,
-        )
-        join_cond = (
-            (F.col("tok") == F.col("rtok"))
-            & (le["salt"] == re_["salt"])
-            & len_ok
-        )
-        joined = le.join(re_, join_cond).drop("salt")
-    else:
-        joined = le.join(re_, (F.col("tok") == F.col("rtok")) & len_ok)
-    return _score_tokensort_candidates(joined, min_shared_tokens, score_cutoff)
-
-
-def _score_tokensort_candidates(
-    joined: DataFrame, min_shared_tokens: int, score_cutoff: int
-) -> DataFrame:
-    """The tokensort lane's candidate dedup + stage-2 refinement over
-    the exploded token equi-join output (shared by the one-shot join
-    and the incremental index probe)."""
-    cand = (
-        joined.groupBy("left_title", "left_key", "right_title", "right_key")
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared_tokens)
-    )
-    from nyc_government_hiring_audit_data_platform_spark.functions.similarity import (
-        levenshtein_similarity,
-    )
-
-    sim = levenshtein_similarity(F.col("left_key"), F.col("right_key"))
-    return (
-        cand.filter(sim >= score_cutoff)
-        .select(
-            "left_title",
-            "right_title",
-            F.round(sim).cast("int").alias("score"),
-        )
+    return _one_shot_pairs(
+        _TOKENSORT, left, right, left_col, right_col, min_shared_tokens,
+        score_cutoff, max_block, salt_buckets, hot_occupancy,
     )
 
 
@@ -579,9 +642,10 @@ def fuzzy_join_tokensort(
     hot_occupancy: int = 1024,
 ) -> DataFrame:
     """Row-level fuzzy join over the oracle-expressible token-sort
-    levenshtein scorer (same re-attach shape as ``fuzzy_join``: score
-    once per distinct title pair, join full rows back by title; AQE
-    picks broadcast vs shuffle for the data-dependent pair table).
+    levenshtein scorer (same re-attach as ``fuzzy_join``,
+    :func:`reattach_title_pairs`: score once per distinct title pair,
+    join full rows back by title; AQE picks broadcast vs shuffle for
+    the data-dependent pair table).
 
     The three skew levers forward verbatim to
     :func:`fuzzy_title_pairs_tokensort` (where their contracts -
@@ -592,11 +656,7 @@ def fuzzy_join_tokensort(
         left, right, left_col, right_col, min_shared_tokens, score_cutoff,
         max_block, salt_buckets, hot_occupancy,
     )
-    out = (
-        left.join(pairs, left[left_col] == pairs["left_title"])
-        .join(right, pairs["right_title"] == right[right_col])
-    )
-    return out.drop("left_title", "right_title")
+    return reattach_title_pairs(left, right, left_col, right_col, pairs)
 
 
 def fuzzy_join(
@@ -615,7 +675,8 @@ def fuzzy_join(
     int (reference J4 row-merge, src/fuzzy_match_salary.py:156).
 
     The expensive scoring runs once per distinct title pair; full rows
-    re-attach via two equi-joins on the title. The pair table carries NO
+    re-attach via two equi-joins on the title
+    (:func:`reattach_title_pairs`). The pair table carries NO
     broadcast hint: its size is data-dependent (the reference's v2.0 run
     produced 8.7M match pairs - BASELINE.md - which at 100x would OOM a
     forced broadcast), so AQE picks the strategy from the observed
@@ -634,12 +695,7 @@ def fuzzy_join(
         left, right, left_col, right_col, prefilter_cutoff, score_cutoff,
         max_block, salt_buckets, hot_occupancy,
     )
-    pairs_small = pairs.select("left_title", "right_title", "score")
-    out = (
-        left.join(pairs_small, left[left_col] == pairs_small["left_title"])
-        .join(right, pairs_small["right_title"] == right[right_col])
-    )
-    return out.drop("left_title", "right_title")
+    return reattach_title_pairs(left, right, left_col, right_col, pairs)
 
 
 # ---------------------------------------------------------------------------
@@ -656,14 +712,20 @@ def fuzzy_join(
 # ONCE as its exploded blocking index, and each postings batch probes
 # the index with cost O(|delta keys| + matched blocks) instead of
 # O(|payroll| + |postings|). Because a scored pair is a pure function of
-# the two titles and the candidate/scoring stages are the SAME code as
-# the one-shot join, (prior matches) UNION (delta probe) is row-identical
-# to the full re-match when the batches partition the postings - the
-# hash-verified claim of the fuzzy_incremental_union driver row.
+# the two titles and the one-shot join IS a probe of the right side's
+# index (same explode, same pair function), (prior matches) UNION
+# (delta probe) is row-identical to the full re-match when the batches
+# partition the postings - the hash-verified claim of the
+# fuzzy_incremental_union driver row.
 #
-# Index layout: one row per (blocking key, title). Persist it
-# partitioned/bucketed on the key column in production so a delta probe
-# shuffles only its own exploded keys (the dedup band index's contract).
+# Index layout: one row per (blocking key, title), described once per
+# lane by its _Lane record (_WRATIO: blk, right_title, right_norm;
+# _TOKENSORT: tok, right_title, right_key) and built by
+# _exploded_titles. Readers take the lane from the key column
+# (_lane_of), so callers never name it. Persist the index
+# partitioned/bucketed on the key column in production so a delta
+# probe shuffles only its own exploded keys (the dedup band index's
+# contract).
 
 
 def build_fuzzy_title_index(
@@ -671,8 +733,8 @@ def build_fuzzy_title_index(
 ) -> DataFrame:
     """Persisted index side of incremental WRatio matching: the stable
     side's distinct normalized titles exploded into their blocking keys
-    (token ∪ char-4-gram - exactly :func:`fuzzy_title_pairs`'s lanes
-    via the shared :func:`_blocking_keys`). Columns (blk, right_title,
+    (token ∪ char-4-gram - exactly the index :func:`fuzzy_title_pairs`
+    builds for its right side). Columns (blk, right_title,
     right_norm); size = O(sum of per-title key counts), linear.
 
     ``max_block`` - the probe path's hot-key lever, applied at BUILD
@@ -683,22 +745,7 @@ def build_fuzzy_title_index(
     one-shot joins' ``max_block`` (:func:`_cap_block_occupancy`). A
     delta title probing a hot key then meets at most ``max_block``
     index rows instead of the key's raw occupancy. None = lossless."""
-    rt = (
-        right.select(F.col(right_col).alias("right_title"))
-        .where(F.col(right_col).isNotNull())
-        .distinct()
-        .withColumn("right_norm", normalize_text(F.col("right_title")))
-    )
-    idx = rt.select(
-        F.explode(_blocking_keys(F.col("right_norm"))).alias("blk"),
-        "right_title",
-        "right_norm",
-    )
-    if max_block is not None:
-        idx = _cap_block_occupancy(
-            idx, "blk", ["right_norm", "right_title"], max_block
-        )
-    return idx
+    return _exploded_titles(_WRATIO, right, right_col, "right", max_block)
 
 
 def incremental_fuzzy_pairs(
@@ -709,27 +756,12 @@ def incremental_fuzzy_pairs(
     score_cutoff: int,
 ) -> DataFrame:
     """Probe a :func:`build_fuzzy_title_index` with a delta batch of
-    left titles: same candidate generation (key equi-join, pair
-    distinct) and the same two scoring stages as
-    :func:`fuzzy_title_pairs` - output-identical to
-    ``fuzzy_title_pairs(delta_left, right, ...)`` (property-tested)
-    without touching the stable side's rows. Same 5-column output."""
-    lt = (
-        delta_left.select(F.col(left_col).alias("left_title"))
-        .where(F.col(left_col).isNotNull())
-        .distinct()
-        .withColumn("left_norm", normalize_text(F.col("left_title")))
-    )
-    le = lt.select(
-        "left_title", "left_norm",
-        F.explode(_blocking_keys(F.col("left_norm"))).alias("blk"),
-    )
-    cand = (
-        le.join(index, "blk")
-        .select("left_title", "left_norm", "right_title", "right_norm")
-        .distinct()
-    )
-    return _score_candidate_pairs(cand, prefilter_cutoff, score_cutoff)
+    left titles - output-identical to ``fuzzy_title_pairs(delta_left,
+    right, ...)`` (property-tested), which is this same probe against
+    the right side's freshly built index, without touching the stable
+    side's rows. Same 5-column output."""
+    probe = _exploded_titles(_WRATIO, delta_left, left_col, "left")
+    return _wratio_pairs(probe, index, prefilter_cutoff, score_cutoff)
 
 
 def build_tokensort_title_index(
@@ -737,27 +769,12 @@ def build_tokensort_title_index(
 ) -> DataFrame:
     """Persisted index side of incremental tokensort matching: the
     stable side's distinct titles exploded into their token-sort-key
-    tokens (exactly :func:`fuzzy_title_pairs_tokensort`'s blocking).
-    Columns (tok, right_title, right_key). ``max_block`` bounds each
-    token's stored occupancy at build time - the probe path's hot-key
-    lever, same truncation and subset-recall semantics as
-    :func:`build_fuzzy_title_index`."""
-    rt = (
-        right.select(F.col(right_col).alias("right_title"))
-        .where(F.col(right_col).isNotNull())
-        .distinct()
-        .withColumn("right_key", token_sort_key(F.col("right_title")))
-    )
-    idx = rt.select(
-        F.explode(F.array_distinct(F.split("right_key", " "))).alias("tok"),
-        "right_title",
-        "right_key",
-    )
-    if max_block is not None:
-        idx = _cap_block_occupancy(
-            idx, "tok", ["right_key", "right_title"], max_block
-        )
-    return idx
+    tokens (exactly the index :func:`fuzzy_title_pairs_tokensort`
+    builds for its right side). Columns (tok, right_title, right_key).
+    ``max_block`` bounds each token's stored occupancy at build time -
+    the probe path's hot-key lever, same truncation and subset-recall
+    semantics as :func:`build_fuzzy_title_index`."""
+    return _exploded_titles(_TOKENSORT, right, right_col, "right", max_block)
 
 
 def incremental_fuzzy_pairs_tokensort(
@@ -768,36 +785,36 @@ def incremental_fuzzy_pairs_tokensort(
     score_cutoff: int = 85,
 ) -> DataFrame:
     """Probe a :func:`build_tokensort_title_index` with a delta batch:
-    token equi-join with the SAME lossless length prefilter riding in
-    the join condition, then the shared candidate dedup + levenshtein
-    stage - output-identical to ``fuzzy_title_pairs_tokensort(
-    delta_left, right, ...)`` (property-tested, and hash-verified
-    end-to-end by the fuzzy_incremental_union driver row)."""
-    lt = (
-        delta_left.select(F.col(left_col).alias("left_title"))
-        .where(F.col(left_col).isNotNull())
-        .distinct()
-        .withColumn("left_key", token_sort_key(F.col("left_title")))
-    )
-    le = lt.select(
-        "left_title",
-        "left_key",
-        F.explode(F.array_distinct(F.split("left_key", " "))).alias("ltok"),
-    )
-    len_ok = (
-        F.abs(F.length("left_key") - F.length("right_key"))
-        <= (F.lit(100 - score_cutoff) / F.lit(100.0))
-        * F.greatest(F.length("left_key"), F.length("right_key"))
-    )
-    joined = le.join(index, (F.col("ltok") == F.col("tok")) & len_ok)
-    return _score_tokensort_candidates(joined, min_shared_tokens, score_cutoff)
+    token equi-join with the lossless length prefilter riding in the
+    join condition, then the candidate dedup + levenshtein stage -
+    output-identical to ``fuzzy_title_pairs_tokensort(delta_left,
+    right, ...)`` (property-tested, and hash-verified end-to-end by
+    the fuzzy_incremental_union driver row)."""
+    probe = _exploded_titles(_TOKENSORT, delta_left, left_col, "left")
+    return _tokensort_pairs(probe, index, min_shared_tokens, score_cutoff)
+
+
+def probe_title_index(
+    index: DataFrame,
+    delta_left: DataFrame,
+    left_col: str,
+    prefilter: int,
+    score_cutoff: int,
+) -> DataFrame:
+    """Probe a title index of EITHER lane, the lane read from the
+    index's own layout: :func:`incremental_fuzzy_pairs` for a WRatio
+    index (``prefilter`` = token_set_ratio cutoff), or
+    :func:`incremental_fuzzy_pairs_tokensort` for a tokensort index
+    (``prefilter`` = min shared tokens)."""
+    lane = _lane_of(index)
+    probe = _exploded_titles(lane, delta_left, left_col, "left")
+    return lane.pairs(probe, index, prefilter, score_cutoff)
 
 
 def extend_title_index(
     index: DataFrame,
     new_right: DataFrame,
     right_col: str,
-    index_fn=None,
     max_block: int | None = None,
 ) -> DataFrame:
     """Maintain the INDEX side incrementally: the append-delta of index
@@ -807,11 +824,8 @@ def extend_title_index(
     persisted index (a file append, no rewrite):
     ``index(old) ∪ extend_title_index(index(old), new)`` ==
     ``index(old ∪ new)`` for UNCAPPED indexes (property-tested for
-    both lanes). Works for either index layout: when ``index_fn`` is
-    not supplied it is INFERRED from the index's own columns (``blk``
-    = the WRatio lane, ``tok`` = the tokensort lane) - a guessed
-    default would build the wrong layout and crash the select for one
-    of the two lanes.
+    both lanes). Works for either lane: the new rows take the layout
+    of the index they extend (:func:`_lane_of`).
 
     ``max_block`` - REQUIRED to match the build cap when the index was
     built with one: the delta is capped per key among the new titles,
@@ -834,19 +848,8 @@ def extend_title_index(
     broadcasts into a semi-join against the index (no index shuffle,
     one streaming scan), yielding the <= |new titles| already-present
     subset, and the anti-join then runs against THAT tiny relation."""
-    if index_fn is None:
-        if "blk" in index.columns:
-            index_fn = build_fuzzy_title_index
-        elif "tok" in index.columns:
-            index_fn = build_tokensort_title_index
-        else:
-            raise ValueError(
-                f"unrecognized index layout {index.columns}; pass index_fn"
-            )
-    fresh = (
-        index_fn(new_right, right_col)
-        if max_block is None
-        else index_fn(new_right, right_col, max_block=max_block)
+    fresh = _exploded_titles(
+        _lane_of(index), new_right, right_col, "right", max_block
     )
     new_titles = fresh.select("right_title").distinct()
     present = (
@@ -902,26 +905,10 @@ def _index_table_name(index_dir: str) -> str:
     IVM state tables (streaming/jobs.py:_state_table_name): the munged
     readable form alone collides across distinct dirs, so an md5 of
     the exact path rides in the name."""
-    import hashlib
-    import os
-
     path = os.path.abspath(index_dir)
     munged = re.sub(r"[^A-Za-z0-9_]+", "_", path).strip("_").lower()
     digest = hashlib.md5(path.encode()).hexdigest()[:10]
     return f"fuzzy_title_index_{munged[-48:].strip('_')}_{digest}".lower()
-
-
-def _index_key_column(index: DataFrame) -> str:
-    """The blocking-key column of either index layout (``blk`` = the
-    WRatio lane, ``tok`` = the tokensort lane)."""
-    if "blk" in index.columns:
-        return "blk"
-    if "tok" in index.columns:
-        return "tok"
-    raise ValueError(
-        f"unrecognized title-index layout {index.columns}; expected a "
-        "blk (WRatio) or tok (tokensort) blocking-key column"
-    )
 
 
 def write_title_index(
@@ -956,15 +943,11 @@ def write_title_index(
     hold rows the base's titles need to re-attach. Pass ``[]``
     explicitly only when the payroll corpus was folded into its base at
     the same time."""
-    import json
-    import os
-    import shutil
-
     if index_format not in ("parquet", "bucketed"):
         raise ValueError(
             f"index_format must be 'parquet' or 'bucketed', got {index_format!r}"
         )
-    key = _index_key_column(index)
+    key = _lane_of(index).key
     meta: dict = {"format": index_format, "key": key}
     if folded_generations is None:
         folded_generations = title_index_folded_generations(index_dir)
@@ -1026,8 +1009,6 @@ def _resolve_index_table(spark, index_dir: str, meta: dict) -> DataFrame:
     normal cadence is repeated short-lived runs, so after a restart the
     files are all that survives). Mirrors
     streaming/jobs.py:_resolve_state_table."""
-    import os
-
     tname = meta["table"]
     cache_key = (spark.sparkContext.applicationId, tname)
     if spark.catalog.tableExists(tname) and _VERIFIED_BUCKET_SPECS.get(
@@ -1073,8 +1054,6 @@ def list_index_generations(index_dir: str) -> list[int]:
     that keeps a replayed postings batch from re-probing against
     generations that landed after its original run (which the payroll
     maintenance probe already covered)."""
-    import os
-
     if not os.path.isdir(index_dir):
         return []
     out = []
@@ -1092,9 +1071,6 @@ def title_index_folded_generations(index_dir: str) -> list[int]:
     live ``g*`` dirs are gone, but the base still carries maintained
     titles whose payroll rows live only in the ``d{j}`` archives - a
     frozen payroll DataFrame would silently drop their matches."""
-    import json
-    import os
-
     meta_path = os.path.join(index_dir, _INDEX_META)
     if not os.path.exists(meta_path):
         return []
@@ -1118,9 +1094,6 @@ def read_title_index(
     reproduces its original delta instead of seeing its prior output
     and emitting an empty one, which the overwrite would persist as a
     LOST generation)."""
-    import json
-    import os
-
     meta_path = os.path.join(index_dir, _INDEX_META)
     if not os.path.exists(meta_path):
         if os.path.isdir(os.path.join(index_dir, "base")):
@@ -1171,30 +1144,23 @@ def read_title_index(
 # >= max_block (or an uncapped append) can never have dropped it; the
 # union therefore still CONTAINS every row the fresh rebuild would
 # keep, and one more cap selects exactly those (property-tested both
-# lanes against index_fn(union_of_titles, max_block)).
-
-
-def _index_order_cols(index: DataFrame) -> tuple[str, list[str]]:
-    """(key column, deterministic member-rank columns) for either index
-    layout - exactly the builders' _cap_block_occupancy arguments."""
-    key = _index_key_column(index)
-    return key, (
-        ["right_norm", "right_title"] if key == "blk"
-        else ["right_key", "right_title"]
-    )
+# lanes against a fresh capped build of the union of titles).
 
 
 def compact_title_index(index: DataFrame, max_block: int) -> DataFrame:
     """Re-cap an appended index at ``max_block``: each blocking key
     keeps its ``max_block`` lowest-ranked members across ALL
-    generations - row-identical to ``index_fn(union_of_titles,
-    max_block=max_block)``, the fresh capped rebuild, PROVIDED every
-    append was uncapped or capped at >= ``max_block`` (a tighter past
+    generations - row-identical to the lane's fresh capped build over
+    the union of titles (``build_*_title_index(..., max_block)``),
+    PROVIDED every append was uncapped or capped at >= ``max_block``
+    (a tighter past
     cap may have dropped rows the rebuild would keep; compaction
     cannot resurrect them - it can only narrow). Works on either lane
-    (layout inferred from the columns)."""
-    key, order_cols = _index_order_cols(index)
-    return _cap_block_occupancy(index, key, order_cols, max_block)
+    (read from the index, :func:`_lane_of`)."""
+    lane = _lane_of(index)
+    return _cap_block_occupancy(
+        index, lane.key, [f"right_{lane.form}", "right_title"], max_block
+    )
 
 
 def title_index_occupancy(index: DataFrame, max_block: int | None = None) -> dict:
@@ -1205,7 +1171,7 @@ def title_index_occupancy(index: DataFrame, max_block: int | None = None) -> dic
     after every append. Trigger recipe: compact when ``keys_over_cap``
     > 0 (exactness of the capped bound lost) or when ``max_per_key``
     crosses the probe-latency budget the cap was sized for."""
-    key = _index_key_column(index)
+    key = _lane_of(index).key
     per_key = index.groupBy(key).agg(F.count(F.lit(1)).alias("occ"))
     aggs = [
         F.sum("occ").alias("n_rows"),
@@ -1256,11 +1222,6 @@ def title_index_bucket_stats(index_dir: str) -> dict:
     re-bucket decision sees the POST-fold size, not the stale base.
     Raises on a plain-parquet or legacy layout (no bucket files to
     measure; ``n_buckets`` is not a knob there)."""
-    import json
-    import os
-
-    import pyarrow.parquet as pq
-
     meta_path = os.path.join(index_dir, _INDEX_META)
     if not os.path.exists(meta_path):
         raise ValueError(
@@ -1327,8 +1288,6 @@ def suggest_index_buckets(
     generation rows count pre-cap, so a ``max_block`` fold may come out
     smaller than sized for - an overshoot in bucket count, never an
     overfull bucket."""
-    import math
-
     s = stats if stats is not None else title_index_bucket_stats(index_dir)
     total = s["rows"] + s["generation_rows"]
     need = max(1, math.ceil(total / max(1, target_rows_per_bucket)))
@@ -1382,12 +1341,6 @@ def compact_persisted_title_index(
     live generation folds - only safe when no maintenance run is
     mid-crash, which a standalone (non-maintained) index trivially
     satisfies."""
-    import json
-    import os
-    import shutil
-
-    from nyc_government_hiring_audit_data_platform_spark import lease as LS
-
     with LS.lifecycle_lease(
         index_dir, "compact_persisted_title_index", lease_stale_after
     ) as _lease:

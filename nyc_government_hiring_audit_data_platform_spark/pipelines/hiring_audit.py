@@ -14,19 +14,28 @@ reachable in this environment.
 
 from __future__ import annotations
 
+import json
+import os
 import random
+import re
+import shutil
+import time
+from contextlib import nullcontext
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from nyc_government_hiring_audit_data_platform_spark import lease as LS
 from nyc_government_hiring_audit_data_platform_spark.functions.dates import (
     format_posting_ts,
     impute_post_until,
     parse_posting_ts,
     posting_duration_days,
 )
+from nyc_government_hiring_audit_data_platform_spark.operators import fuzzy as FZ
+from nyc_government_hiring_audit_data_platform_spark.operators import incremental as IVM
 from nyc_government_hiring_audit_data_platform_spark.operators import relational as R
-from nyc_government_hiring_audit_data_platform_spark.operators.fuzzy import fuzzy_join
+from nyc_government_hiring_audit_data_platform_spark.plans import inspect as PI
 
 # ---------------------------------------------------------------------------
 # fixtures (FIXTURES.md §1-3)
@@ -203,7 +212,7 @@ def fuzzy_match_salary(
     prefilter_cutoff: int = 85,
     score_cutoff: int = 85,
     limit: int | None = None,
-    join_fn=fuzzy_join,
+    join_fn=FZ.fuzzy_join,
     row_key: str | None = None,
     observation=None,
     max_block: int | None = None,
@@ -351,14 +360,15 @@ def build_payroll_title_index(
     payroll: DataFrame,
     year_start: int = 2024,
     year_end: int = 2025,
-    index_fn=None,
     max_block: int | None = None,
 ) -> DataFrame:
     """The persisted side of incremental salary matching: the PREPPED
     payroll titles (same cast+BETWEEN as :func:`fuzzy_match_salary`, so
-    the title domain is identical) exploded into their blocking index
-    (operators.fuzzy.build_tokensort_title_index by default;
-    ``index_fn=build_fuzzy_title_index`` for the WRatio lane). Write it
+    the title domain is identical) exploded into their tokensort
+    blocking index (operators.fuzzy.build_tokensort_title_index; for
+    the WRatio lane build ``build_fuzzy_title_index(_prep_payroll(...),
+    "title_description")`` - the probe reads the lane from the index,
+    so nothing else changes). Write it
     once - partitioned/bucketed on the key column in production - and
     every weekly postings batch probes it via
     :func:`incremental_fuzzy_match_salary` instead of re-running the
@@ -367,13 +377,10 @@ def build_payroll_title_index(
     path's hot-key lever, forwarded to the index builder (build-time
     per-key occupancy cap, subset-recall semantics - see
     operators.fuzzy.build_fuzzy_title_index)."""
-    from nyc_government_hiring_audit_data_platform_spark.operators import fuzzy as FZ
-
-    index_fn = index_fn or FZ.build_tokensort_title_index
-    prepped = _prep_payroll(payroll, year_start, year_end)
-    if max_block is None:
-        return index_fn(prepped, "title_description")
-    return index_fn(prepped, "title_description", max_block=max_block)
+    return FZ.build_tokensort_title_index(
+        _prep_payroll(payroll, year_start, year_end), "title_description",
+        max_block,
+    )
 
 
 def incremental_fuzzy_match_salary(
@@ -385,7 +392,6 @@ def incremental_fuzzy_match_salary(
     prefilter_cutoff: int = 85,
     score_cutoff: int = 85,
     limit: int | None = None,
-    probe_fn=None,
     row_key: str | None = None,
     observation=None,
 ) -> DataFrame:
@@ -405,26 +411,22 @@ def incremental_fuzzy_match_salary(
     The per-posting-row ``limit`` composes too: the top-N window is
     keyed per posting row, and a delta batch's rows are new.
 
-    ``probe_fn`` pairs with the index's builder:
-    ``incremental_fuzzy_pairs_tokensort`` (default; 4th positional arg
-    = min shared tokens, matching ``fuzzy_join_tokensort``'s use of
-    ``prefilter_cutoff``) or ``incremental_fuzzy_pairs`` (WRatio lane,
-    4th arg = token_set_ratio prefilter cutoff)."""
-    from nyc_government_hiring_audit_data_platform_spark.operators import fuzzy as FZ
-
-    probe_fn = probe_fn or FZ.incremental_fuzzy_pairs_tokensort
+    The lane is read from the index's layout
+    (``operators.fuzzy.probe_title_index``): a tokensort index
+    (:func:`build_payroll_title_index`) takes ``prefilter_cutoff`` as
+    its min shared tokens, as ``fuzzy_join_tokensort`` does; a WRatio
+    index (``build_fuzzy_title_index``) takes it as the token_set_ratio
+    prefilter cutoff, as ``fuzzy_join`` does."""
     pay = _prep_payroll(payroll, year_start, year_end)
     post = _prep_postings(delta_postings)
     post_row = row_key or "_post_row"
     if limit is not None and row_key is None:
         post = post.withColumn("_post_row", F.monotonically_increasing_id())
-    pairs = probe_fn(
+    pairs = FZ.probe_title_index(
         title_index, post, "business_title", prefilter_cutoff, score_cutoff
-    ).select("left_title", "right_title", "score")
-    joined = (
-        post.join(pairs, post["business_title"] == pairs["left_title"])
-        .join(pay, pairs["right_title"] == pay["title_description"])
-        .drop("left_title", "right_title")
+    )
+    joined = FZ.reattach_title_pairs(
+        post, pay, "business_title", "title_description", pairs
     )
     return _band_limit_select(joined, limit, row_key, post_row, observation)
 
@@ -439,7 +441,7 @@ def fuzzy_match_durations(
     lightcast: DataFrame,
     prefilter_cutoff: int = 75,
     score_cutoff: int = 75,
-    join_fn=fuzzy_join,
+    join_fn=FZ.fuzzy_join,
     max_block: int | None = None,
     salt_buckets: int | None = None,
     hot_occupancy: int = 1024,
@@ -532,10 +534,6 @@ GOLD_UNIQUE_STATE_SPECS = [
 def gold_matches_state(matches: DataFrame) -> DataFrame:
     """Mergeable partial state for the GOLD unique table: one shuffle
     over the match batch, group-sized output."""
-    from nyc_government_hiring_audit_data_platform_spark.operators import (
-        incremental as IVM,
-    )
-
     return IVM.partial_agg_state(
         matches, GOLD_UNIQUE_STATE_KEYS, GOLD_UNIQUE_STATE_SPECS
     )
@@ -544,10 +542,6 @@ def gold_matches_state(matches: DataFrame) -> DataFrame:
 def gold_matches_state_refresh(state: DataFrame, new_matches: DataFrame) -> DataFrame:
     """Fold a new batch of match rows into the persisted GOLD state -
     O(|batch| + |state|), the full match history never re-reads."""
-    from nyc_government_hiring_audit_data_platform_spark.operators import (
-        incremental as IVM,
-    )
-
     return IVM.incremental_agg_refresh(
         state, new_matches, GOLD_UNIQUE_STATE_KEYS, GOLD_UNIQUE_STATE_SPECS
     )
@@ -557,10 +551,6 @@ def gold_salary_matches_unique_from_state(state: DataFrame) -> DataFrame:
     """GOLD answer from the state alone: evaluate the duration parse
     chain on the small intermediate (one eval per distinct key), then
     the final MAX by title."""
-    from nyc_government_hiring_audit_data_platform_spark.operators import (
-        incremental as IVM,
-    )
-
     partial = IVM.finalize_agg_state(
         state, GOLD_UNIQUE_STATE_KEYS, GOLD_UNIQUE_STATE_SPECS
     )
@@ -644,10 +634,6 @@ def _durations_projection(durations: DataFrame) -> DataFrame:
 def gold_durations_state(durations: DataFrame, sign: int = 1) -> DataFrame:
     """Count state for one durations batch (``sign=-1`` builds the
     retraction fold for deleted rows)."""
-    from nyc_government_hiring_audit_data_platform_spark.operators import (
-        incremental as IVM,
-    )
-
     return IVM.partial_agg_state(
         _durations_projection(durations),
         GOLD_DURATIONS_UNIQUE_KEYS,
@@ -660,10 +646,6 @@ def gold_durations_state_refresh(
     state: DataFrame, new_durations: DataFrame, sign: int = 1
 ) -> DataFrame:
     """Fold a durations batch into the persisted DISTINCT state."""
-    from nyc_government_hiring_audit_data_platform_spark.operators import (
-        incremental as IVM,
-    )
-
     return IVM.incremental_agg_refresh(
         state,
         _durations_projection(new_durations),
@@ -676,10 +658,6 @@ def gold_durations_state_refresh(
 def gold_durations_unique_from_state(state: DataFrame) -> DataFrame:
     """The DISTINCT table from the count state alone: keys whose
     retained count is positive (drop_empty), counts discarded."""
-    from nyc_government_hiring_audit_data_platform_spark.operators import (
-        incremental as IVM,
-    )
-
     return (
         IVM.finalize_agg_state(
             state, GOLD_DURATIONS_UNIQUE_KEYS, GOLD_DURATIONS_UNIQUE_SPECS
@@ -845,9 +823,6 @@ def _checkpoint_identity(checkpoint_dir: str) -> str | None:
     """The streaming query id Spark pins in ``{checkpoint}/metadata``
     at first start - the durable identity of a checkpoint's batch
     numbering. None when the checkpoint has never run a query."""
-    import json
-    import os
-
     meta = os.path.join(checkpoint_dir, "metadata")
     if not os.path.exists(meta):
         return None
@@ -895,15 +870,12 @@ def _guard_checkpoint(
     ``read_payroll_corpus`` (the manifest already lists 0 as folded)
     and the next ``compact_payroll_corpus`` GC deletes the new archive
     as dead, silently losing them."""
-    import os
-    import re as _re
-
     path = os.path.join(out_dir, marker)
     current = _checkpoint_identity(checkpoint_dir)
     has_batches = folded or (
         os.path.isdir(out_dir)
         and any(
-            _re.fullmatch(batch_dir_re, d)
+            re.fullmatch(batch_dir_re, d)
             and os.path.isdir(os.path.join(out_dir, d))
             for d in os.listdir(out_dir)
         )
@@ -946,8 +918,6 @@ def _guard_checkpoint(
 def _record_checkpoint(out_dir: str, checkpoint_dir: str, marker: str) -> None:
     """Pin the checkpoint identity after a successful run (first run
     only; later runs are guarded against a different identity)."""
-    import os
-
     path = os.path.join(out_dir, marker)
     current = _checkpoint_identity(checkpoint_dir)
     if os.path.exists(path) or current is None:
@@ -962,9 +932,6 @@ def _record_checkpoint(out_dir: str, checkpoint_dir: str, marker: str) -> None:
 def _read_batch_meta(matches_dir: str, name: str) -> dict | None:
     """The ``_meta.json`` a sink stamped into one per-batch output
     subdirectory (``b{id}`` / ``p{id}``), or None pre-first-write."""
-    import json
-    import os
-
     path = os.path.join(matches_dir, name, "_meta.json")
     if not os.path.exists(path):
         return None
@@ -973,9 +940,6 @@ def _read_batch_meta(matches_dir: str, name: str) -> dict | None:
 
 
 def _write_batch_meta(matches_dir: str, name: str, meta: dict) -> None:
-    import json
-    import os
-
     path = os.path.join(matches_dir, name, "_meta.json")
     tmp = path + ".tmp"
     with open(tmp, "w") as f:
@@ -997,9 +961,6 @@ def _matches_manifest(matches_dir: str) -> dict:
     point. Folded batches keep their ``_meta.json`` on disk (the
     covered-set and replay-skip bookkeeping reads them; folding rows
     must not launder batch history)."""
-    import json
-    import os
-
     path = os.path.join(matches_dir, _MATCHES_MANIFEST)
     if not os.path.exists(path):
         return {"base": None, "folded": []}
@@ -1016,9 +977,6 @@ def _payroll_manifest(payroll_dir: str) -> dict:
     after :func:`compact_payroll_corpus`) and which delta ids that
     base already contains (``folded_deltas``). Replaced atomically -
     this ONE json swap is the compaction's commit point."""
-    import json
-    import os
-
     path = os.path.join(payroll_dir, _PAYROLL_MANIFEST)
     if not os.path.exists(path):
         return {"base": "base", "folded_deltas": []}
@@ -1040,8 +998,6 @@ def read_payroll_corpus(
     multiset is unchanged: base_v{n+1} = old base ⊎ folded d rows); a
     pinned id that is neither on disk nor folded raises rather than
     silently shrinking a replay's corpus."""
-    import os
-
     man = _payroll_manifest(payroll_dir)
     folded = set(man["folded_deltas"])
     out = spark.read.parquet(os.path.join(payroll_dir, man["base"]))
@@ -1096,17 +1052,6 @@ def compact_payroll_corpus(
     ``index_dir`` (``lease.lifecycle_lease``: a live holder refuses
     with LeaseHeldError, a holder stale past ``lease_stale_after`` is
     taken over)."""
-    import json
-    import os
-    import re as _re
-    import shutil
-
-    from nyc_government_hiring_audit_data_platform_spark.operators import (
-        fuzzy as FZ,
-    )
-
-    from nyc_government_hiring_audit_data_platform_spark import lease as LS
-
     with LS.lifecycle_lease(
         index_dir, "compact_payroll_corpus", lease_stale_after
     ) as _lease:
@@ -1123,9 +1068,9 @@ def compact_payroll_corpus(
         for d in os.listdir(payroll_dir):
             if not os.path.isdir(os.path.join(payroll_dir, d)):
                 continue
-            if (_re.fullmatch(r"base_v\d+", d) or d == "base") and d != man["base"]:
+            if (re.fullmatch(r"base_v\d+", d) or d == "base") and d != man["base"]:
                 dead.add(d)
-            m = _re.fullmatch(r"d(\d+)", d)
+            m = re.fullmatch(r"d(\d+)", d)
             if m and int(m.group(1)) in set(man["folded_deltas"]):
                 dead.add(d)
         for d in dead:
@@ -1140,7 +1085,7 @@ def compact_payroll_corpus(
         new_folded = sorted(set(man["folded_deltas"]) | set(eligible))
         n = max(
             [int(m.group(1)) for d in os.listdir(payroll_dir)
-             if (m := _re.fullmatch(r"base_v(\d+)", d))] + [0]
+             if (m := re.fullmatch(r"base_v(\d+)", d))] + [0]
         ) + 1
         new_base = f"base_v{n}"
         corpus = spark.read.parquet(os.path.join(payroll_dir, man["base"]))
@@ -1184,14 +1129,11 @@ def _covered_postings_batches(matches_dir: str, batch_id: int) -> list[int]:
     missing either check would double-count the (batch x d{j}) pairs).
     Validates the matches dir (no-meta or limit-probed batches refuse)
     BEFORE the caller writes anything."""
-    import os
-    import re as _re
-
     covered: list[int] = []
     if not os.path.isdir(matches_dir):
         return covered
     for d in sorted(os.listdir(matches_dir)):
-        m = _re.fullmatch(r"b(\d+)", d)
+        m = re.fullmatch(r"b(\d+)", d)
         if not m:
             continue
         bmeta = _read_batch_meta(matches_dir, d)
@@ -1230,10 +1172,6 @@ def _visible_maintenance(index_dir: str, payroll_dir: str) -> tuple[list[int], l
     now live in the payroll base (compact_payroll_corpus only folds
     index-folded, d-present deltas, so the pairing held when it
     ran)."""
-    from nyc_government_hiring_audit_data_platform_spark.operators import (
-        fuzzy as FZ,
-    )
-
     d_ids = set(list_payroll_deltas(payroll_dir)) | set(
         _payroll_manifest(payroll_dir)["folded_deltas"]
     )
@@ -1254,15 +1192,12 @@ def list_payroll_deltas(payroll_dir: str) -> list[int]:
     of truth for rows now living in the base; corpus readers must go
     through :func:`read_payroll_corpus` / ``_visible_maintenance``,
     which consult both)."""
-    import os
-    import re as _re
-
     if not os.path.isdir(payroll_dir):
         return []
     return sorted(
         int(m.group(1))
         for d in os.listdir(payroll_dir)
-        if (m := _re.fullmatch(r"d(\d+)", d))
+        if (m := re.fullmatch(r"d(\d+)", d))
         and os.path.isdir(os.path.join(payroll_dir, d))
     )
 
@@ -1278,7 +1213,6 @@ def run_fuzzy_match_ingest(
     prefilter_cutoff: int = 85,
     score_cutoff: int = 85,
     limit: int | None = None,
-    probe_fn=None,
     row_key: str | None = None,
     lease_stale_after: float = 3600.0,
 ) -> None:
@@ -1288,7 +1222,8 @@ def run_fuzzy_match_ingest(
     (:func:`incremental_fuzzy_match_salary`) and its matches land in
     a per-batch subdirectory of ``matches_dir`` - per-batch cost
     O(|batch| + matched index blocks), the payroll blocking work paid
-    once at index-build time, never per week.
+    once at index-build time, never per week. The probe runs in the
+    lane the index was built for (read from its layout).
 
     The index reads through ``operators.fuzzy.read_title_index``, so
     every persisted shape works unchanged: the legacy plain-parquet
@@ -1326,17 +1261,6 @@ def run_fuzzy_match_ingest(
     micro-batch - a concurrent maintenance/compaction step refuses
     with LeaseHeldError, and a lease whose heartbeat is older than
     ``lease_stale_after`` (a crashed run) is taken over."""
-    import os
-
-    from nyc_government_hiring_audit_data_platform_spark.operators import (
-        fuzzy as FZ,
-    )
-    from nyc_government_hiring_audit_data_platform_spark.plans import (
-        inspect as PI,
-    )
-
-    from nyc_government_hiring_audit_data_platform_spark import lease as LS
-
     with LS.lifecycle_lease(
         index_dir, "run_fuzzy_match_ingest", lease_stale_after
     ) as _lease:
@@ -1406,7 +1330,7 @@ def run_fuzzy_match_ingest(
                 pay, index, batch_df,
                 year_start=year_start, year_end=year_end,
                 prefilter_cutoff=prefilter_cutoff, score_cutoff=score_cutoff,
-                limit=limit, probe_fn=probe_fn, row_key=row_key,
+                limit=limit, row_key=row_key,
             )
             exchanges = PI.shuffle_count(matches)
             batch_df.write.mode("overwrite").parquet(
@@ -1446,8 +1370,6 @@ def run_fuzzy_index_maintenance(
     year_end: int = 2025,
     prefilter_cutoff: int = 85,
     score_cutoff: int = 85,
-    probe_fn=None,
-    index_fn=None,
     row_key: str | None = None,
     max_block: int | None = None,
     lease_stale_after: float = 3600.0,
@@ -1458,10 +1380,11 @@ def run_fuzzy_index_maintenance(
     Per payroll micro-batch ``j``:
 
     1. ``operators.fuzzy.extend_title_index`` computes the index
-       append-delta against the index as of the OTHER generations and
-       overwrites ``{index_dir}/g{j}`` (replay reproduces identical
-       content - reading its own prior output would emit an empty
-       delta and lose the generation under the overwrite);
+       append-delta (in the persisted index's lane) against the index
+       as of the OTHER generations and overwrites ``{index_dir}/g{j}``
+       (replay reproduces identical content - reading its own prior
+       output would emit an empty delta and lose the generation under
+       the overwrite);
     2. the raw batch rows archive to ``{payroll_dir}/d{j}`` so later
        postings probes can re-attach them. ``d{j}`` is the batch's
        ATOMIC COMMIT POINT (staging write + dir rename, after
@@ -1500,14 +1423,6 @@ def run_fuzzy_index_maintenance(
     earlier top-N member), so this sink refuses matches_dir batches
     that were produced with one. Same checkpoint-identity guard as the
     ingest sink (marker ``_checkpoint_id_maintenance``)."""
-    import os
-
-    from nyc_government_hiring_audit_data_platform_spark.operators import (
-        fuzzy as FZ,
-    )
-
-    from nyc_government_hiring_audit_data_platform_spark import lease as LS
-
     with LS.lifecycle_lease(
         index_dir, "run_fuzzy_index_maintenance", lease_stale_after
     ) as _lease:
@@ -1573,8 +1488,7 @@ def run_fuzzy_index_maintenance(
             )
             prepped = _prep_payroll(batch_df, year_start, year_end)
             delta_idx = FZ.extend_title_index(
-                index_before, prepped, "title_description", index_fn=index_fn,
-                max_block=max_block,
+                index_before, prepped, "title_description", max_block=max_block,
             )
             # g{j} first, then d{j} as the atomic COMMIT POINT (staging
             # write + dir rename): a crash in between leaves g{j} without
@@ -1587,8 +1501,6 @@ def run_fuzzy_index_maintenance(
             final = os.path.join(payroll_dir, f"d{batch_id}")
             batch_df.write.mode("overwrite").parquet(staged)
             if os.path.isdir(final):
-                import shutil
-
                 # removed-then-renamed: the brief d-less window reads as
                 # "uncommitted" (safe direction), never as partial rows
                 shutil.rmtree(final)
@@ -1600,18 +1512,18 @@ def run_fuzzy_index_maintenance(
                 # ALL batch titles, not the stored dedup delta: a new
                 # payroll ROW under an existing title is still a new match.
                 # extend-against-empty builds the batch-title index in
-                # whichever layout the persisted index uses (inferred from
-                # its columns), capped like the base when max_block is set.
+                # the persisted index's lane (read from its layout),
+                # capped like the base when max_block is set.
                 batch_index = FZ.extend_title_index(
                     index_before.limit(0), prepped, "title_description",
-                    index_fn=index_fn, max_block=max_block,
+                    max_block=max_block,
                 )
                 matches = incremental_fuzzy_match_salary(
                     batch_df, batch_index, posts,
                     year_start=year_start, year_end=year_end,
                     prefilter_cutoff=prefilter_cutoff,
                     score_cutoff=score_cutoff,
-                    limit=None, probe_fn=probe_fn, row_key=row_key,
+                    limit=None, row_key=row_key,
                 )
                 matches.write.mode("overwrite").parquet(
                     os.path.join(matches_dir, pname)
@@ -1642,8 +1554,6 @@ def _fold_output_partitions(
     new base, and the file count the fold exists to retire instead
     grows additively per fold cycle (caught by
     tools/matches_fold_probe.py, round 13)."""
-    import os
-
     total = 0
     for p in paths:
         for dirpath, _dirnames, files in os.walk(p):
@@ -1659,9 +1569,6 @@ def _strip_to_meta(path: str, ignore_errors: bool = False) -> None:
     replay skip, and the checkpoint guards keep reading after the fold.
     Shared by the entry GC and the post-commit cleanup so what a folded
     dir retains is defined in exactly one place."""
-    import os
-    import shutil
-
     for f in os.listdir(path):
         if f == "_meta.json":
             continue
@@ -1720,15 +1627,6 @@ def compact_matches_corpus(
     matches dir outside any live lifecycle (no sinks that could write
     concurrently). Making the opt-out explicit keeps this the one
     lifecycle step that cannot silently run unleased by default."""
-    import json
-    import os
-    import re as _re
-    import shutil
-
-    from contextlib import nullcontext
-
-    from nyc_government_hiring_audit_data_platform_spark import lease as LS
-
     ctx = (
         LS.lifecycle_lease(
             lease_dir, "compact_matches_corpus", lease_stale_after
@@ -1743,7 +1641,7 @@ def compact_matches_corpus(
         # inside dirs the manifest already folded (a crash mid-cleanup)
         for d in os.listdir(matches_dir) if os.path.isdir(matches_dir) else []:
             if (
-                _re.fullmatch(r"mbase_v\d+", d)
+                re.fullmatch(r"mbase_v\d+", d)
                 and d != man["base"]
                 and os.path.isdir(os.path.join(matches_dir, d))
             ):
@@ -1756,7 +1654,7 @@ def compact_matches_corpus(
         eligible = sorted(
             d
             for d in (os.listdir(matches_dir) if os.path.isdir(matches_dir) else [])
-            if _re.fullmatch(r"[bp]\d+", d)
+            if re.fullmatch(r"[bp]\d+", d)
             and os.path.isdir(os.path.join(matches_dir, d))
             and d not in already_folded
             and _read_batch_meta(matches_dir, d) is not None
@@ -1771,7 +1669,7 @@ def compact_matches_corpus(
             corpus = rows if corpus is None else corpus.unionByName(rows)
         n = max(
             [int(m.group(1)) for d in os.listdir(matches_dir)
-             if (m := _re.fullmatch(r"mbase_v(\d+)", d))] + [0]
+             if (m := re.fullmatch(r"mbase_v(\d+)", d))] + [0]
         ) + 1
         new_base = f"mbase_v{n}"
         # coalesce to byte-sized output files: the union write would
@@ -1813,15 +1711,12 @@ def read_ingested_matches(spark: SparkSession, matches_dir: str) -> DataFrame:
     run) unioned with the still-unfolded ``b{id}`` / ``p{id}``
     per-batch subdirectories. Folded dirs hold only their meta and
     read through the base - the multiset is unchanged."""
-    import os
-    import re as _re
-
     man = _matches_manifest(matches_dir)
     folded = set(man["folded"])
     dirs = sorted(
         d
         for d in os.listdir(matches_dir)
-        if _re.fullmatch(r"[bp]\d+", d)
+        if re.fullmatch(r"[bp]\d+", d)
         and os.path.isdir(os.path.join(matches_dir, d))
         and d not in folded
     )
@@ -1861,19 +1756,9 @@ def lifecycle_status(
     under the read: transient races surface as
     ``index["stats_unavailable"] = True`` for that tick (bucket
     fields absent), never as a crash."""
-    import json
-    import os
-    import re as _re
-    import time as _time
-
-    from nyc_government_hiring_audit_data_platform_spark.lease import _LEASE
-    from nyc_government_hiring_audit_data_platform_spark.operators import (
-        fuzzy as FZ,
-    )
-
     actions: list[str] = []
 
-    lease_path = os.path.join(index_dir, _LEASE)
+    lease_path = os.path.join(index_dir, LS._LEASE)
     lease: dict | None = None
     try:
         with open(lease_path) as f:
@@ -1884,7 +1769,7 @@ def lifecycle_status(
         holder = None  # present but unreadable
     if holder is not False:
         try:
-            age = _time.time() - os.path.getmtime(lease_path)
+            age = time.time() - os.path.getmtime(lease_path)
         except OSError:
             age = None  # released between the read and the stat
         if age is not None:
@@ -1902,7 +1787,7 @@ def lifecycle_status(
     staging = sorted(
         d
         for d in (os.listdir(index_dir) if os.path.isdir(index_dir) else [])
-        if d == "_compact_staging" or _re.fullmatch(r"_torn_g\d+\.staging", d)
+        if d == "_compact_staging" or re.fullmatch(r"_torn_g\d+\.staging", d)
     )
     index: dict = {
         "format": (meta or {}).get("format", "legacy"),
@@ -1963,7 +1848,7 @@ def lifecycle_status(
             for d in (
                 os.listdir(matches_dir) if os.path.isdir(matches_dir) else []
             )
-            if _re.fullmatch(r"[bp]\d+", d)
+            if re.fullmatch(r"[bp]\d+", d)
             and os.path.isdir(os.path.join(matches_dir, d))
         )
         folded_names = set(man["folded"])

@@ -98,8 +98,14 @@ def fetch_single_dataset(dataset_id, offset, limit) -> list[dict]:
     """Reference-shaped fetch (api/fetch_data.py:28-43): all three params
     arrive untyped from the route and are int-cast first (a non-numeric
     value raises ValueError -> HTTP 400), an unknown id raises ValueError
-    ('Invalid dataset_id' -> 400, reference :36-37)."""
+    ('Invalid dataset_id' -> 400, reference :36-37), and so does a
+    negative offset or limit (Spark would reject it as an analysis
+    error, which the routes would answer with 500)."""
     dataset_id, offset, limit = int(dataset_id), int(offset), int(limit)
+    if offset < 0 or limit < 0:
+        raise ValueError(
+            f"offset and limit must be non-negative, got {offset}/{limit}"
+        )
     if dataset_id not in _REGISTRY:
         raise ValueError(f"Invalid dataset_id: {dataset_id}")
     return fetch_report(dataset_id, offset, limit)

@@ -825,6 +825,26 @@ def test_incremental_match_union_equals_full_rematch(spark):
         assert got == want and len(got) > 0
 
 
+def test_wratio_index_probes_through_the_pipeline(spark):
+    """The probe's lane comes from the index, not from a caller knob: a
+    WRatio-lane payroll index probed through
+    incremental_fuzzy_match_salary with no lane argument yields the
+    rows of the default one-shot fuzzy_match_salary (fuzzy_join, the
+    same WRatio lane) over the same delta postings."""
+    from nyc_government_hiring_audit_data_platform_spark.operators import fuzzy as FZ
+
+    payroll = HA.make_payroll_fixture(spark, 500)
+    delta = HA.make_postings_fixture(spark, 60)
+    idx = FZ.build_fuzzy_title_index(
+        HA._prep_payroll(payroll, 2024, 2025), "title_description"
+    )
+    got = sorted(
+        map(tuple, HA.incremental_fuzzy_match_salary(payroll, idx, delta).collect())
+    )
+    want = sorted(map(tuple, HA.fuzzy_match_salary(payroll, delta).collect()))
+    assert got == want and len(got) > 0
+
+
 def test_incremental_probe_never_rescans_stable_side(spark, tmp_path):
     """The incremental contract at the plan level: a delta probe reads
     the INDEX files and the delta - the stable side's source path must
@@ -920,7 +940,7 @@ def test_extend_title_index_equals_rebuild_both_lanes(spark):
         assert got == want and len(got) > 0
         # idempotence: re-extending with already-indexed titles is empty
         assert FZ.extend_title_index(
-            idx_old.unionByName(delta), new, "title_description", index_fn
+            idx_old.unionByName(delta), new, "title_description"
         ).count() == 0
 
 
@@ -1373,7 +1393,7 @@ def test_compact_title_index_equals_fresh_capped_rebuild(spark):
             idx = index_fn(gens[0], "title_description", max_block=gen_cap)
             for g in gens[1:]:
                 delta = FZ.extend_title_index(
-                    idx, g, "title_description", index_fn, max_block=gen_cap
+                    idx, g, "title_description", max_block=gen_cap
                 )
                 idx = idx.unionByName(delta)
             compacted = sorted(

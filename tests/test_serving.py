@@ -172,7 +172,8 @@ def test_routes_via_testclient():
 def test_stdlib_server_routes_end_to_end():
     """The zero-dependency HTTP server serves the reference's route
     surface with its status mapping: 200 on root/health/reports/pages,
-    400 on non-numeric params, 404 on unknown id and empty pages."""
+    400 on non-numeric or negative params, 404 on unknown id and empty
+    pages."""
     import json
     import threading
     import urllib.error
@@ -203,6 +204,11 @@ def test_stdlib_server_routes_end_to_end():
         assert code == 200 and len(body) == 5
         code, body = get("/reports/abc")
         assert code == 400
+        # negative paging is a bad parameter (400), not a Spark error (500)
+        code, body = get("/reports/2?limit=-1")
+        assert code == 400 and "non-negative" in body["detail"]
+        code, body = get("/reports/2?offset=-1")
+        assert code == 400 and "non-negative" in body["detail"]
         # unknown id is ValueError('Invalid dataset_id') -> 400, matching
         # the FastAPI shim's mapping of the reference fetch behavior
         code, body = get("/reports/99")
