@@ -14,7 +14,8 @@ Layout
                    dedup, similarity search, text analysis, multimodal.
 - ``sources``    : paginated REST API source, parquet helpers, xlsx.
 - ``pipelines``  : the hiring-audit refresh (BRONZE -> fuzzy joins ->
-                   GOLD) and the BRONZE/GOLD catalog namespaces.
+                   GOLD), the BRONZE/GOLD catalog namespaces and the
+                   versioned-base fold protocol of the lifecycle stores.
 - ``serving``    : paginated GOLD reads and dashboard aggregates.
 - ``plans``      : physical-plan inspection helpers for plan-quality gates.
 - ``lease``      : single-writer lease for the fuzzy-match lifecycle.

@@ -61,6 +61,7 @@ from nyc_government_hiring_audit_data_platform_spark.functions.text import (
 from nyc_government_hiring_audit_data_platform_spark.functions.textstats import (
     char_shingles,
 )
+from nyc_government_hiring_audit_data_platform_spark.pipelines import versioned as VB
 
 # ---------------------------------------------------------------------------
 # pure-Python scorers (published fuzzywuzzy/rapidfuzz algorithm definitions)
@@ -867,12 +868,22 @@ def extend_title_index(
 # ---------------------------------------------------------------------------
 #
 # Layouts read_title_index understands, newest first:
-#   - managed: ``{index_dir}/_index_meta.json`` + ``{index_dir}/base``
-#     (plain parquet, or an external BUCKETED table on the blocking key)
-#     + zero or more ``{index_dir}/g{batch_id}`` append generations
-#     written by the streaming maintenance sink;
+#   - managed: ``{index_dir}/_index_meta.json`` naming the base version
+#     ``{index_dir}/base_v{n}`` (plain parquet, or an external BUCKETED
+#     table ``{_index_table_name}_v{n}`` on the blocking key) + zero or
+#     more ``{index_dir}/g{batch_id}`` append generations written by the
+#     streaming maintenance sink. A meta without a ``base`` key (older
+#     writers) names ``base``;
 #   - legacy: plain parquet files at ``{index_dir}`` itself (what every
 #     pre-round-12 caller wrote with ``df.write.parquet(index_dir)``).
+#
+# The meta is the index's manifest in the versioned-base protocol
+# (pipelines/versioned.py), shared with the payroll and matches corpora:
+# write_title_index and compact_persisted_title_index each write a NEW
+# base version and then swap the meta to name it, so a base version -
+# and the catalog table named after it - never changes once written.
+# Readers take the meta's base plus the g{j} dirs the meta does not
+# record as folded.
 #
 # The bucketed shape is the 100 TB probe shape: the weekly delta
 # probe's blocking-key equi-join then moves only the delta's exploded
@@ -880,35 +891,69 @@ def extend_title_index(
 # (plan-gated in tests/test_fuzzy.py) - while a plain-parquet index
 # re-shuffles its full key domain on every weekly run. Append
 # generations ride as plain parquet and DO shuffle (a union hides the
-# bucketing from the planner); compact_title_index folds them back
-# into the base to restore the shuffle-free shape - the compaction
-# cadence bounds how long the probe pays the generation tax.
+# bucketing from the planner); compaction folds them into a new base
+# version to restore the shuffle-free shape - the compaction cadence
+# bounds how long the probe pays the generation tax.
 
 _INDEX_META = "_index_meta.json"
 
-# (applicationId, table name) -> the bucket count this application
-# last verified/registered for the table. Keeps _resolve_index_table's
-# stale-declaration DESCRIBE off the per-micro-batch hot path: it
-# re-runs only when the on-disk meta's count moves away from what was
-# verified (the only way the registration can go stale). applicationId
-# is the right granularity: table registrations live in the app-level
-# SharedState catalog, and unlike id(session) it can never alias a
-# GC'd session's verification onto a new one. Bounded by the number of
-# distinct index tables an app touches.
-_VERIFIED_BUCKET_SPECS: dict = {}
-
 
 def _index_table_name(index_dir: str) -> str:
-    """Deterministic catalog identifier for a bucketed title index,
-    derived from the absolute path alone so any session can re-register
-    (or defensively DROP) the entry. Same collision-hardening as the
-    IVM state tables (streaming/jobs.py:_state_table_name): the munged
+    """Deterministic catalog identifier stem for a bucketed title
+    index, derived from the absolute path alone so any session can
+    re-register (or defensively DROP) the entry; each base version is
+    registered as ``{stem}_v{n}``. Same collision-hardening as the IVM
+    state tables (streaming/jobs.py:_state_table_name): the munged
     readable form alone collides across distinct dirs, so an md5 of
     the exact path rides in the name."""
     path = os.path.abspath(index_dir)
     munged = re.sub(r"[^A-Za-z0-9_]+", "_", path).strip("_").lower()
     digest = hashlib.md5(path.encode()).hexdigest()[:10]
     return f"fuzzy_title_index_{munged[-48:].strip('_')}_{digest}".lower()
+
+
+def title_index_meta(index_dir: str) -> dict | None:
+    """The index's ``_index_meta.json`` (its manifest), or None for a
+    legacy plain-parquet layout (or a dir that is no index). A meta
+    without a ``base`` key (written before base versions) names
+    ``base``."""
+    meta = VB.read_manifest(os.path.join(index_dir, _INDEX_META), None)
+    return None if meta is None else {"base": "base", **meta}
+
+
+def _write_index_version(
+    index: DataFrame, index_dir: str, name: str, index_format: str, n_buckets
+) -> dict:
+    """Write ``index`` as the fresh base version ``name`` (a bucketed
+    one also registers as its own catalog table); returns the meta
+    describing it."""
+    key = _lane_of(index).key
+    path = os.path.join(index_dir, name)
+    meta = {"format": index_format, "key": key, "base": name}
+    if index_format == "parquet":
+        index.write.parquet(path)
+        return meta
+    spark = index.sparkSession
+    if n_buckets is None:
+        n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    table = f"{_index_table_name(index_dir)}_{name.rsplit('_', 1)[1]}"
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    index.write.bucketBy(n_buckets, key).option("path", path).saveAsTable(table)
+    return {**meta, "table": table, "n_buckets": n_buckets}
+
+
+def _commit_index(
+    spark, index_dir: str, old: dict, meta: dict, folded: list[int], lease=None
+) -> None:
+    """Swap the meta to the new version, remove the superseded base and
+    the folded ``g{j}`` dirs, and drop the superseded version's catalog
+    table (it names files that are gone)."""
+    VB.commit(
+        index_dir, _INDEX_META, meta, old.get("base"), [f"g{g}" for g in folded],
+        lease=lease,
+    )
+    if old.get("table") and old["table"] != meta.get("table"):
+        spark.sql(f"DROP TABLE IF EXISTS {old['table']}")
 
 
 def write_title_index(
@@ -919,40 +964,37 @@ def write_title_index(
     folded_generations: list[int] | None = None,
 ) -> None:
     """Persist a ``build_*_title_index`` output as the production index
-    at ``index_dir``, replacing whatever was there (a REBUILD - also
-    what compaction calls to fold append generations back in; existing
+    at ``index_dir``, replacing whatever was there (a REBUILD; existing
     ``g*`` generation dirs are removed because the fresh base subsumes
     them only when the caller built it over the union, so the writer
     refuses to guess and clears them).
 
-    ``index_format="parquet"``: plain parquet under ``{index_dir}/base``.
-    ``index_format="bucketed"``: an EXTERNAL bucketed table on the
-    blocking key (``n_buckets`` defaulting to the session's shuffle
-    partitions), the shape under which a delta probe never shuffles
-    the index side. ``_index_meta.json`` records the layout for
-    :func:`read_title_index`; it lands LAST (write-then-rename), so a
-    crash mid-write leaves a directory the reader refuses (no meta,
-    base/ present -> error) rather than a silently partial index.
+    ``index_format="parquet"``: plain parquet under a fresh
+    ``{index_dir}/base_v{n}``. ``index_format="bucketed"``: an EXTERNAL
+    bucketed table on the blocking key (``n_buckets`` defaulting to the
+    session's shuffle partitions), the shape under which a delta probe
+    never shuffles the index side. ``_index_meta.json`` records the
+    layout for :func:`read_title_index`; it lands LAST (write-then-
+    rename), so a crash mid-write leaves a directory the reader refuses
+    (no meta, a base dir present -> error) rather than a silently
+    partial index.
 
     ``folded_generations`` - the generation ids whose rows live in this
-    base (set by :func:`compact_persisted_title_index`; the ingest
-    sink's frozen-payroll guard and payroll-delta selection read it).
-    None (the default) PRESERVES the existing meta's record - a rebuild
-    of a previously-maintained dir must not launder it back into
-    looking never-maintained while the ``d{j}`` payroll archives still
-    hold rows the base's titles need to re-attach. Pass ``[]``
-    explicitly only when the payroll corpus was folded into its base at
-    the same time."""
+    base (the ingest sink's frozen-payroll guard and payroll-delta
+    selection read it). None (the default) PRESERVES the existing
+    meta's record - a rebuild of a previously-maintained dir must not
+    launder it back into looking never-maintained while the ``d{j}``
+    payroll archives still hold rows the base's titles need to
+    re-attach. Pass ``[]`` explicitly only when the payroll corpus was
+    folded into its base at the same time."""
     if index_format not in ("parquet", "bucketed"):
         raise ValueError(
             f"index_format must be 'parquet' or 'bucketed', got {index_format!r}"
         )
-    key = _lane_of(index).key
-    meta: dict = {"format": index_format, "key": key}
+    old = title_index_meta(index_dir) or {}
     if folded_generations is None:
-        folded_generations = title_index_folded_generations(index_dir)
-    if folded_generations:
-        meta["folded_generations"] = sorted(folded_generations)
+        folded_generations = old.get("folded_generations", [])
+    name = VB.begin(index_dir, old.get("base"), "base")
     # a rebuild subsumes prior append generations: clear them so the
     # reader cannot union stale pre-rebuild rows onto the fresh base.
     # The old meta is replaced by a TOMBSTONE (not removed): readers
@@ -960,78 +1002,29 @@ def write_title_index(
     # folded_generations record durable for the recovery rebuild to
     # preserve - losing it would silently shrink the ingest's
     # re-attach corpus (review r12 pass 3).
-    if os.path.isdir(index_dir):
-        for d in os.listdir(index_dir):
-            if re.fullmatch(r"g\d+", d) and os.path.isdir(
-                os.path.join(index_dir, d)
-            ):
-                shutil.rmtree(os.path.join(index_dir, d))
-        meta_path = os.path.join(index_dir, _INDEX_META)
-        if os.path.exists(meta_path):
-            tomb = {"rebuilding": True}
-            if folded_generations:
-                tomb["folded_generations"] = sorted(folded_generations)
-            tmp = meta_path + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(tomb, f)
-            os.replace(tmp, meta_path)
-    base = os.path.join(index_dir, "base")
-    spark = index.sparkSession
-    tname = _index_table_name(index_dir)
-    # BOTH formats drop any stale catalog entry under the deterministic
-    # name: rewriting a previously-bucketed dir as plain parquet would
-    # otherwise leave a table declaring CLUSTERED BY over unbucketed
-    # files - a later catalog-table join would trust false bucketing,
-    # skip its exchange, and return wrong rows
-    spark.sql(f"DROP TABLE IF EXISTS {tname}")
-    if index_format == "parquet":
-        index.write.mode("overwrite").parquet(base)
-    else:
-        if n_buckets is None:
-            n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        (
-            index.write.mode("overwrite")
-            .bucketBy(n_buckets, key)
-            .option("path", base)
-            .saveAsTable(tname)
+    for g in list_index_generations(index_dir):
+        shutil.rmtree(os.path.join(index_dir, f"g{g}"))
+    folded = {"folded_generations": sorted(folded_generations)}
+    if old:
+        VB.write_atomic(
+            os.path.join(index_dir, _INDEX_META),
+            json.dumps({"rebuilding": True, **folded}),
         )
-        meta.update({"table": tname, "n_buckets": n_buckets})
-    tmp = os.path.join(index_dir, _INDEX_META + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, os.path.join(index_dir, _INDEX_META))
+    meta = _write_index_version(index, index_dir, name, index_format, n_buckets)
+    _commit_index(index.sparkSession, index_dir, old, {**meta, **folded}, [])
 
 
 def _resolve_index_table(spark, index_dir: str, meta: dict) -> DataFrame:
-    """The bucketed base as a catalog table, re-registering it when
-    this session's catalog has never seen it (the default catalog is
+    """The bucketed base as a catalog table, registering it when this
+    session's catalog has never seen it (the default catalog is
     in-memory and session-scoped - session.py - and the weekly probe's
     normal cadence is repeated short-lived runs, so after a restart the
-    files are all that survives). Mirrors
-    streaming/jobs.py:_resolve_state_table."""
+    files are all that survives). Each table name stands for one base
+    version whose files never change, so a registered name is never
+    stale. Mirrors streaming/jobs.py:_resolve_state_table."""
     tname = meta["table"]
-    cache_key = (spark.sparkContext.applicationId, tname)
-    if spark.catalog.tableExists(tname) and _VERIFIED_BUCKET_SPECS.get(
-        cache_key
-    ) != meta["n_buckets"]:
-        # a long-lived session's catalog entry can predate a re-bucketed
-        # compaction (n_buckets="auto" evolves the count; the compactor
-        # is another process, so THIS session's in-memory catalog never
-        # saw the DROP). A stale CLUSTERED BY declaration over
-        # differently-bucketed files would let a bucketed join elide its
-        # exchange on a false premise and silently drop matches - verify
-        # the registered bucket count against the meta and re-register
-        # on mismatch. The session cache keeps the DESCRIBE off the
-        # per-micro-batch hot path: it re-runs only when the META's
-        # count moves (the only way the registration can go stale).
-        desc = {
-            r["col_name"]: r["data_type"]
-            for r in spark.sql(f"DESCRIBE TABLE EXTENDED {tname}").collect()
-        }
-        if int(desc.get("Num Buckets", -1)) != meta["n_buckets"]:
-            spark.sql(f"DROP TABLE IF EXISTS {tname}")
     if not spark.catalog.tableExists(tname):
-        path = os.path.join(index_dir, "base")
+        path = os.path.join(index_dir, meta["base"])
         schema = spark.read.parquet(path).schema
         cols = ", ".join(
             f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields
@@ -1042,7 +1035,6 @@ def _resolve_index_table(spark, index_dir: str, meta: dict) -> DataFrame:
             f"CLUSTERED BY (`{meta['key']}`) INTO {meta['n_buckets']} BUCKETS "
             f"LOCATION '{loc}'"
         )
-    _VERIFIED_BUCKET_SPECS[cache_key] = meta["n_buckets"]
     return spark.table(tname)
 
 
@@ -1054,14 +1046,7 @@ def list_index_generations(index_dir: str) -> list[int]:
     that keeps a replayed postings batch from re-probing against
     generations that landed after its original run (which the payroll
     maintenance probe already covered)."""
-    if not os.path.isdir(index_dir):
-        return []
-    out = []
-    for d in os.listdir(index_dir):
-        m = re.fullmatch(r"g(\d+)", d)
-        if m and os.path.isdir(os.path.join(index_dir, d)):
-            out.append(int(m.group(1)))
-    return sorted(out)
+    return VB.generations(index_dir, "g")
 
 
 def title_index_folded_generations(index_dir: str) -> list[int]:
@@ -1071,19 +1056,17 @@ def title_index_folded_generations(index_dir: str) -> list[int]:
     live ``g*`` dirs are gone, but the base still carries maintained
     titles whose payroll rows live only in the ``d{j}`` archives - a
     frozen payroll DataFrame would silently drop their matches."""
-    meta_path = os.path.join(index_dir, _INDEX_META)
-    if not os.path.exists(meta_path):
-        return []
-    with open(meta_path) as f:
-        return sorted(json.load(f).get("folded_generations", []))
+    return sorted((title_index_meta(index_dir) or {}).get("folded_generations", []))
 
 
 def read_title_index(
     spark, index_dir: str, generations: list[int] | None = None
 ) -> DataFrame:
-    """The production index at ``index_dir``: the base (plain parquet,
-    or the bucketed catalog table - re-registered on demand) unioned
-    with ``g{batch_id}`` append generations. Directories with no
+    """The production index at ``index_dir``: the meta's base (plain
+    parquet, or the bucketed catalog table - registered on demand)
+    unioned with the ``g{batch_id}`` append generations the meta does
+    not record as folded (a folded ``g{j}`` a crashed compaction left
+    on disk is never read twice). Directories with no
     ``_index_meta.json`` read as the legacy layout (plain parquet at
     the root; no generations possible).
 
@@ -1094,11 +1077,11 @@ def read_title_index(
     reproduces its original delta instead of seeing its prior output
     and emitting an empty one, which the overwrite would persist as a
     LOST generation)."""
-    meta_path = os.path.join(index_dir, _INDEX_META)
-    if not os.path.exists(meta_path):
-        if os.path.isdir(os.path.join(index_dir, "base")):
+    meta = title_index_meta(index_dir)
+    if meta is None:
+        if VB.litter(index_dir, None, "base"):
             raise ValueError(
-                f"{index_dir} has a base/ directory but no {_INDEX_META}: "
+                f"{index_dir} has a base directory but no {_INDEX_META}: "
                 "a write_title_index crashed before publishing its meta - "
                 "rebuild the index"
             )
@@ -1107,8 +1090,6 @@ def read_title_index(
                 "a legacy (meta-less) index has no append generations"
             )
         return spark.read.parquet(index_dir)
-    with open(meta_path) as f:
-        meta = json.load(f)
     if meta.get("rebuilding"):
         raise ValueError(
             f"{index_dir} holds a rebuild tombstone: a write_title_index "
@@ -1119,10 +1100,10 @@ def read_title_index(
     if meta["format"] == "bucketed":
         out = _resolve_index_table(spark, index_dir, meta)
     else:
-        out = spark.read.parquet(os.path.join(index_dir, "base"))
+        out = spark.read.parquet(os.path.join(index_dir, meta["base"]))
     if generations is None:
         generations = list_index_generations(index_dir)
-    for gid in sorted(generations):
+    for gid in sorted(set(generations) - set(meta.get("folded_generations", []))):
         out = out.unionByName(
             spark.read.parquet(os.path.join(index_dir, f"g{gid}"))
         )
@@ -1222,20 +1203,13 @@ def title_index_bucket_stats(index_dir: str) -> dict:
     re-bucket decision sees the POST-fold size, not the stale base.
     Raises on a plain-parquet or legacy layout (no bucket files to
     measure; ``n_buckets`` is not a knob there)."""
-    meta_path = os.path.join(index_dir, _INDEX_META)
-    if not os.path.exists(meta_path):
-        raise ValueError(
-            f"{index_dir} has no {_INDEX_META} - legacy plain-parquet "
-            "indexes have no bucket layout to measure"
-        )
-    with open(meta_path) as f:
-        meta = json.load(f)
+    meta = title_index_meta(index_dir) or {"format": "legacy"}
     if meta.get("format") != "bucketed":
         raise ValueError(
             f"{index_dir} is format={meta.get('format')!r}; bucket stats "
             "apply only to index_format='bucketed'"
         )
-    base = os.path.join(index_dir, "base")
+    base = os.path.join(index_dir, meta["base"])
     per_bucket: dict[int, dict] = {}
     for fn in os.listdir(base):
         m = re.fullmatch(r"part-\d+-.+_(\d+)\.c\d+.*\.parquet", fn)
@@ -1249,7 +1223,9 @@ def title_index_bucket_stats(index_dir: str) -> dict:
         b["bytes"] += os.path.getsize(path)
         b["files"] += 1
     gen_rows = 0
-    for g in list_index_generations(index_dir):
+    for g in set(list_index_generations(index_dir)) - set(
+        meta.get("folded_generations", [])
+    ):
         gdir = os.path.join(index_dir, f"g{g}")
         for fn in os.listdir(gdir):
             if fn.endswith(".parquet") and not fn.startswith("."):
@@ -1326,10 +1302,13 @@ def compact_persisted_title_index(
     ``n_buckets="auto"`` when the suggestion differs from the meta's
     count.
 
-    The fold materializes through a STAGING parquet dir before
-    ``write_title_index`` clears the old layout: the compacted plan
-    reads the very files the rebuild overwrites, and Spark's lazy scan
-    would otherwise read back its own half-overwritten inputs.
+    Crash-safe through the versioned-base protocol
+    (``pipelines/versioned.py``, shared with the payroll and matches
+    folds): the fold writes a fresh ``base_v{n}`` (a bucketed one
+    registered as its own ``{table}_v{n}``) while readers keep the old
+    base, then one meta swap commits it; a crash on either side of the
+    swap leaves only leftovers readers skip and the next compaction's
+    entry GC removes.
 
     ``payroll_dir`` - pass the maintenance flow's payroll archive dir
     so only COMMITTED generations fold (a ``g{j}`` whose ``d{j}``
@@ -1343,42 +1322,13 @@ def compact_persisted_title_index(
     satisfies."""
     with LS.lifecycle_lease(
         index_dir, "compact_persisted_title_index", lease_stale_after
-    ) as _lease:
-        # entry-time GC (round-12 VERDICT ask #5): a hard kill between the
-        # torn-generation stash renames below and the finally-restore skips
-        # the finally, stranding _torn_g{j}.staging dirs (and possibly a
-        # _compact_staging) that no reader ever sees and no replay ever
-        # reclaims - permanent disk leakage on exactly the crash path
-        # compaction exists to survive. Mirror compact_payroll_corpus'
-        # entry GC: restore a stash whose g{j} is ABSENT (the rename-away
-        # happened, the restore did not - status quo ante, the torn batch
-        # stays live for the maintenance replay), remove one whose g{j}
-        # the replay already rewrote (a dead duplicate). A stranded
-        # _compact_staging is always dead: its content either committed
-        # through write_title_index or this run recomputes the fold.
-        # Single-writer makes the sweep safe on entry.
-        if os.path.isdir(index_dir):
-            for d in os.listdir(index_dir):
-                m = re.fullmatch(r"_torn_g(\d+)\.staging", d)
-                if not m or not os.path.isdir(os.path.join(index_dir, d)):
-                    continue
-                live = os.path.join(index_dir, f"g{m.group(1)}")
-                if os.path.isdir(live):
-                    shutil.rmtree(os.path.join(index_dir, d))
-                else:
-                    os.rename(os.path.join(index_dir, d), live)
-            shutil.rmtree(
-                os.path.join(index_dir, "_compact_staging"), ignore_errors=True
-            )
-
-        meta_path = os.path.join(index_dir, _INDEX_META)
-        if not os.path.exists(meta_path):
+    ) as lease:
+        meta = title_index_meta(index_dir)
+        if meta is None:
             raise ValueError(
                 f"{index_dir} is a legacy plain-parquet index (no "
                 f"{_INDEX_META}); rewrite it with write_title_index first"
             )
-        with open(meta_path) as f:
-            meta = json.load(f)
         if meta.get("rebuilding"):
             raise ValueError(
                 f"{index_dir} holds a rebuild tombstone - rebuild the index "
@@ -1389,54 +1339,20 @@ def compact_persisted_title_index(
             # has no bucket knob, and its refusal (raised by the stats
             # read) must land with the dir untouched
             n_buckets = suggest_index_buckets(index_dir)
-        live = list_index_generations(index_dir)
+        folded = meta.get("folded_generations", [])
+        name = VB.begin(index_dir, meta["base"], "base", [f"g{g}" for g in folded])
+        fold_gens = list_index_generations(index_dir)
         if payroll_dir is not None:
-            committed = {
-                int(m.group(1))
-                for d in (
-                    os.listdir(payroll_dir) if os.path.isdir(payroll_dir) else []
-                )
-                if (m := re.fullmatch(r"d(\d+)", d))
-                and os.path.isdir(os.path.join(payroll_dir, d))
-            }
-            fold_gens = [g for g in live if g in committed]
-        else:
-            fold_gens = live
-        torn = sorted(set(live) - set(fold_gens))
-        folded = read_title_index(spark, index_dir, generations=fold_gens)
+            fold_gens = sorted(set(fold_gens) & set(VB.generations(payroll_dir, "d")))
+        index = read_title_index(spark, index_dir, generations=fold_gens)
         if max_block is not None:
-            folded = compact_title_index(folded, max_block)
-        staging = os.path.join(index_dir, "_compact_staging")
-        folded.write.mode("overwrite").parquet(staging)
-        # the fold materialization is the long action and compactions
-        # have no micro-batch cadence to heartbeat on: refresh the
-        # staleness clock (and learn of any takeover) BEFORE the
-        # destructive rebuild below starts renaming generations away
-        _lease.heartbeat()
-        # torn generations must SURVIVE the rebuild's g*-clearing for the
-        # maintenance replay to overwrite - stash them through the staging
-        # area with the fold
-        torn_stash = []
-        for g in torn:
-            src = os.path.join(index_dir, f"g{g}")
-            dst = os.path.join(index_dir, f"_torn_g{g}.staging")
-            shutil.rmtree(dst, ignore_errors=True)
-            os.rename(src, dst)
-            torn_stash.append((g, dst))
+            index = compact_title_index(index, max_block)
+        new = _write_index_version(
+            index, index_dir, name, meta["format"], n_buckets or meta.get("n_buckets")
+        )
         # the folded ids stay on record (cumulatively): the base now holds
         # maintained titles whose payroll rows live only in the d{j}
         # archives, and the ingest's frozen-payroll guard must keep firing
         # after the live g* dirs are gone
-        all_folded = sorted(set(meta.get("folded_generations", [])) | set(fold_gens))
-        try:
-            write_title_index(
-                spark.read.parquet(staging),
-                index_dir,
-                index_format=meta["format"],
-                n_buckets=n_buckets or meta.get("n_buckets"),
-                folded_generations=all_folded,
-            )
-        finally:
-            shutil.rmtree(staging, ignore_errors=True)
-            for g, dst in torn_stash:
-                os.rename(dst, os.path.join(index_dir, f"g{g}"))
+        new["folded_generations"] = sorted(set(folded) | set(fold_gens))
+        _commit_index(spark, index_dir, meta, new, fold_gens, lease)

@@ -35,6 +35,7 @@ from nyc_government_hiring_audit_data_platform_spark.functions.dates import (
 from nyc_government_hiring_audit_data_platform_spark.operators import fuzzy as FZ
 from nyc_government_hiring_audit_data_platform_spark.operators import incremental as IVM
 from nyc_government_hiring_audit_data_platform_spark.operators import relational as R
+from nyc_government_hiring_audit_data_platform_spark.pipelines import versioned as VB
 from nyc_government_hiring_audit_data_platform_spark.plans import inspect as PI
 
 # ---------------------------------------------------------------------------
@@ -814,6 +815,17 @@ def gold_tables_sql(
 #              per-key occupancy bound; folded deltas read through the
 #              versioned payroll base
 #
+# The three stores - title index (g{j}), payroll corpus (d{j}) and
+# matches corpus (b{j}/p{j}) - share ONE crash-safe fold protocol,
+# pipelines/versioned.py: entry GC, the new base written completely to
+# a fresh version dir (base_v{n} / mbase_v{n}), then one atomic swap of
+# the store's manifest (_index_meta.json / _payroll_manifest.json /
+# _matches_manifest.json) naming it and the generations it folded,
+# then cleanup. Readers take the manifest's base plus the generation
+# dirs it does not record as folded, so a crash on either side of the
+# swap never double-counts or drops rows; lifecycle_status reports the
+# leftovers as litter until the next fold's entry GC removes them.
+#
 # Both sinks refuse foreign/fresh checkpoints over existing state (the
 # pinned-identity guards) and skip replays of completed batches; the
 # maintenance sink refuses matches built with a per-posting-row limit.
@@ -823,11 +835,7 @@ def _checkpoint_identity(checkpoint_dir: str) -> str | None:
     """The streaming query id Spark pins in ``{checkpoint}/metadata``
     at first start - the durable identity of a checkpoint's batch
     numbering. None when the checkpoint has never run a query."""
-    meta = os.path.join(checkpoint_dir, "metadata")
-    if not os.path.exists(meta):
-        return None
-    with open(meta) as f:
-        return json.load(f).get("id")
+    return VB.read_manifest(os.path.join(checkpoint_dir, "metadata"), {}).get("id")
 
 
 def _guard_checkpoint(
@@ -923,28 +931,28 @@ def _record_checkpoint(out_dir: str, checkpoint_dir: str, marker: str) -> None:
     if os.path.exists(path) or current is None:
         return
     os.makedirs(out_dir, exist_ok=True)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(current)
-    os.replace(tmp, path)
+    VB.write_atomic(path, current)
+
+
+_BATCH_META = "_meta.json"
 
 
 def _read_batch_meta(matches_dir: str, name: str) -> dict | None:
     """The ``_meta.json`` a sink stamped into one per-batch output
     subdirectory (``b{id}`` / ``p{id}``), or None pre-first-write."""
-    path = os.path.join(matches_dir, name, "_meta.json")
-    if not os.path.exists(path):
-        return None
-    with open(path) as f:
-        return json.load(f)
+    return VB.read_manifest(os.path.join(matches_dir, name, _BATCH_META), None)
 
 
 def _write_batch_meta(matches_dir: str, name: str, meta: dict) -> None:
-    path = os.path.join(matches_dir, name, "_meta.json")
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, path)
+    VB.write_atomic(os.path.join(matches_dir, name, _BATCH_META), json.dumps(meta))
+
+
+def _unfolded_batches(matches_dir: str, man: dict) -> list[str]:
+    """Names of the ``b{id}`` / ``p{id}`` per-batch dirs on disk that
+    the matches manifest ``man`` does not record as folded."""
+    folded = set(man["folded"])
+    names = (f"{p}{j}" for p in "bp" for j in VB.generations(matches_dir, p))
+    return sorted(n for n in names if n not in folded)
 
 
 _MATCHES_MANIFEST = "_matches_manifest.json"
@@ -961,11 +969,9 @@ def _matches_manifest(matches_dir: str) -> dict:
     point. Folded batches keep their ``_meta.json`` on disk (the
     covered-set and replay-skip bookkeeping reads them; folding rows
     must not launder batch history)."""
-    path = os.path.join(matches_dir, _MATCHES_MANIFEST)
-    if not os.path.exists(path):
-        return {"base": None, "folded": []}
-    with open(path) as f:
-        return json.load(f)
+    return VB.read_manifest(
+        os.path.join(matches_dir, _MATCHES_MANIFEST), {"base": None, "folded": []}
+    )
 
 
 _PAYROLL_MANIFEST = "_payroll_manifest.json"
@@ -977,11 +983,10 @@ def _payroll_manifest(payroll_dir: str) -> dict:
     after :func:`compact_payroll_corpus`) and which delta ids that
     base already contains (``folded_deltas``). Replaced atomically -
     this ONE json swap is the compaction's commit point."""
-    path = os.path.join(payroll_dir, _PAYROLL_MANIFEST)
-    if not os.path.exists(path):
-        return {"base": "base", "folded_deltas": []}
-    with open(path) as f:
-        return json.load(f)
+    return VB.read_manifest(
+        os.path.join(payroll_dir, _PAYROLL_MANIFEST),
+        {"base": "base", "folded_deltas": []},
+    )
 
 
 def read_payroll_corpus(
@@ -1029,7 +1034,9 @@ def compact_payroll_corpus(
     ``d{j}`` archive for the committed-batch pairing rule, and a torn
     batch has no business in the base at all). Returns the ids folded.
 
-    Crash-safe via a versioned base + one atomic manifest swap:
+    Crash-safe via a versioned base + one atomic manifest swap (the
+    protocol of ``pipelines/versioned.py``, shared with the index and
+    matches folds):
 
     1. stale unreferenced ``base_v*`` leftovers from a previous crash
        are GC'd;
@@ -1054,27 +1061,12 @@ def compact_payroll_corpus(
     taken over)."""
     with LS.lifecycle_lease(
         index_dir, "compact_payroll_corpus", lease_stale_after
-    ) as _lease:
+    ) as lease:
         man = _payroll_manifest(payroll_dir)
-        # GC, both crash directions: base versions a prior run wrote but
-        # never committed, AND leftovers a crash AFTER the commit point
-        # stranded - the superseded base (including the literal original
-        # 'base' dir, which the version regex alone would never match) and
-        # delta archives the manifest already records as folded (their
-        # rows live in the current base; a maintenance replay may also
-        # have re-created one - equally dead). Single-writer makes this
-        # safe to do on entry.
-        dead = set()
-        for d in os.listdir(payroll_dir):
-            if not os.path.isdir(os.path.join(payroll_dir, d)):
-                continue
-            if (re.fullmatch(r"base_v\d+", d) or d == "base") and d != man["base"]:
-                dead.add(d)
-            m = re.fullmatch(r"d(\d+)", d)
-            if m and int(m.group(1)) in set(man["folded_deltas"]):
-                dead.add(d)
-        for d in dead:
-            shutil.rmtree(os.path.join(payroll_dir, d))
+        new_base = VB.begin(
+            payroll_dir, man["base"], "base",
+            [f"d{j}" for j in man["folded_deltas"]],
+        )
         eligible = sorted(
             (set(FZ.title_index_folded_generations(index_dir))
              & set(list_payroll_deltas(payroll_dir)))
@@ -1082,41 +1074,14 @@ def compact_payroll_corpus(
         )
         if not eligible:
             return []
-        new_folded = sorted(set(man["folded_deltas"]) | set(eligible))
-        n = max(
-            [int(m.group(1)) for d in os.listdir(payroll_dir)
-             if (m := re.fullmatch(r"base_v(\d+)", d))] + [0]
-        ) + 1
-        new_base = f"base_v{n}"
-        corpus = spark.read.parquet(os.path.join(payroll_dir, man["base"]))
-        for j in eligible:
-            corpus = corpus.unionByName(
-                spark.read.parquet(os.path.join(payroll_dir, f"d{j}"))
-            )
-        # coalesce to byte-sized output files: the union write would
-        # otherwise carry one file per folded delta (plus every old-base
-        # file) into each new base, growing additively per fold cycle
-        corpus = corpus.coalesce(
-            _fold_output_partitions(
-                [os.path.join(payroll_dir, man["base"])]
-                + [os.path.join(payroll_dir, f"d{j}") for j in eligible]
-            )
+        folded = [f"d{j}" for j in eligible]
+        _write_fold(spark, payroll_dir, [man["base"]] + folded, new_base)
+        VB.commit(
+            payroll_dir, _PAYROLL_MANIFEST,
+            {"base": new_base,
+             "folded_deltas": sorted(set(man["folded_deltas"]) | set(eligible))},
+            man["base"], folded, lease=lease,
         )
-        corpus.write.parquet(os.path.join(payroll_dir, new_base))
-        # the base rewrite is the long action and compactions have no
-        # micro-batch cadence to heartbeat on: refresh the staleness
-        # clock (and learn of any takeover) BEFORE the commit swap, so
-        # a fold that outlives stale_after cannot silently commit under
-        # a usurper's concurrent writes
-        _lease.heartbeat()
-        tmp = os.path.join(payroll_dir, _PAYROLL_MANIFEST + ".tmp")
-        with open(tmp, "w") as f:
-            json.dump({"base": new_base, "folded_deltas": new_folded}, f)
-        os.replace(tmp, os.path.join(payroll_dir, _PAYROLL_MANIFEST))
-        # cleanup past the commit point: unreferenced, safe to lose
-        shutil.rmtree(os.path.join(payroll_dir, man["base"]), ignore_errors=True)
-        for j in eligible:
-            shutil.rmtree(os.path.join(payroll_dir, f"d{j}"), ignore_errors=True)
         return eligible
 
 
@@ -1130,12 +1095,8 @@ def _covered_postings_batches(matches_dir: str, batch_id: int) -> list[int]:
     Validates the matches dir (no-meta or limit-probed batches refuse)
     BEFORE the caller writes anything."""
     covered: list[int] = []
-    if not os.path.isdir(matches_dir):
-        return covered
-    for d in sorted(os.listdir(matches_dir)):
-        m = re.fullmatch(r"b(\d+)", d)
-        if not m:
-            continue
+    for j in VB.generations(matches_dir, "b"):
+        d = f"b{j}"
         bmeta = _read_batch_meta(matches_dir, d)
         if bmeta is None:
             raise ValueError(
@@ -1153,7 +1114,7 @@ def _covered_postings_batches(matches_dir: str, batch_id: int) -> list[int]:
         if batch_id not in bmeta["generations"] and (
             batch_id not in bmeta.get("payroll_deltas", [])
         ):
-            covered.append(int(m.group(1)))
+            covered.append(j)
     return covered
 
 
@@ -1192,14 +1153,7 @@ def list_payroll_deltas(payroll_dir: str) -> list[int]:
     of truth for rows now living in the base; corpus readers must go
     through :func:`read_payroll_corpus` / ``_visible_maintenance``,
     which consult both)."""
-    if not os.path.isdir(payroll_dir):
-        return []
-    return sorted(
-        int(m.group(1))
-        for d in os.listdir(payroll_dir)
-        if (m := re.fullmatch(r"d(\d+)", d))
-        and os.path.isdir(os.path.join(payroll_dir, d))
-    )
+    return VB.generations(payroll_dir, "d")
 
 
 def run_fuzzy_match_ingest(
@@ -1544,46 +1498,32 @@ def run_fuzzy_index_maintenance(
             _record_checkpoint(d, checkpoint_dir, "_checkpoint_id_maintenance")
 
 
-def _fold_output_partitions(
-    paths: list[str], target_bytes: int = 128 << 20
-) -> int:
-    """How many files a corpus fold should write: input bytes (driver-
-    side listing, no Spark job) over a ~128 MB/file target. Without
-    this, the fold's union write PRESERVES its input partitioning - N
-    folded dirs produce N output files, old-base files carry into every
-    new base, and the file count the fold exists to retire instead
-    grows additively per fold cycle (caught by
-    tools/matches_fold_probe.py, round 13)."""
-    total = 0
-    for p in paths:
-        for dirpath, _dirnames, files in os.walk(p):
-            for f in files:
-                if f.endswith(".parquet") and not f.startswith("."):
-                    total += os.path.getsize(os.path.join(dirpath, f))
-    return max(1, -(-total // target_bytes))
-
-
-def _strip_to_meta(path: str, ignore_errors: bool = False) -> None:
-    """Remove everything inside a folded batch dir EXCEPT its
-    ``_meta.json`` - the one file the covered-set bookkeeping, the
-    replay skip, and the checkpoint guards keep reading after the fold.
-    Shared by the entry GC and the post-commit cleanup so what a folded
-    dir retains is defined in exactly one place."""
-    for f in os.listdir(path):
-        if f == "_meta.json":
-            continue
-        fp = os.path.join(path, f)
-        if os.path.isdir(fp):
-            shutil.rmtree(fp, ignore_errors=ignore_errors)
-        elif ignore_errors:
-            try:
-                os.remove(fp)
-            except OSError:
-                # post-commit cleanup must not fail a fold that already
-                # committed; the next entry GC finishes the job
-                pass
-        else:
-            os.remove(fp)
+def _write_fold(
+    spark: SparkSession, root: str, dirs: list[str], new_base: str,
+    target_bytes: int = 128 << 20,
+) -> None:
+    """Write the multiset union of ``root``'s ``dirs`` (the current base
+    and the generations being folded) as the new base version,
+    coalesced to ~``target_bytes`` per file (input bytes from a
+    driver-side listing, no Spark job). Without the coalesce the union
+    write PRESERVES its input partitioning - N folded dirs produce N
+    output files, old-base files carry into every new base, and the
+    file count the fold exists to retire instead grows additively per
+    fold cycle (caught by tools/matches_fold_probe.py, round 13)."""
+    paths = [os.path.join(root, d) for d in dirs]
+    total = sum(
+        os.path.getsize(os.path.join(dirpath, f))
+        for p in paths
+        for dirpath, _dirnames, files in os.walk(p)
+        for f in files
+        if f.endswith(".parquet") and not f.startswith(".")
+    )
+    corpus = spark.read.parquet(paths[0])
+    for p in paths[1:]:
+        corpus = corpus.unionByName(spark.read.parquet(p))
+    corpus.coalesce(max(1, -(-total // target_bytes))).write.parquet(
+        os.path.join(root, new_base)
+    )
 
 
 def compact_matches_corpus(
@@ -1601,8 +1541,9 @@ def compact_matches_corpus(
     shape :func:`compact_payroll_corpus` retired on the payroll side).
     Returns the dir names folded this run.
 
-    Same crash-safe protocol as the payroll fold: entry-time GC of
-    both crash directions, the new base (current base ⊎ eligible batch
+    Same crash-safe protocol as the payroll and index folds
+    (``pipelines/versioned.py``): entry-time GC of both crash
+    directions, the new base (current base ⊎ eligible batch
     rows - a pure multiset union, content identical to what readers
     already assembled) writes completely to a fresh ``mbase_v{n}``,
     then ONE atomic manifest swap commits it; cleanup past the commit
@@ -1634,73 +1575,26 @@ def compact_matches_corpus(
         if lease_dir is not None
         else nullcontext()
     )
-    with ctx as _lease:
+    with ctx as lease:
         man = _matches_manifest(matches_dir)
-        # entry GC, both crash directions: mbase versions written but never
-        # committed (or superseded by a later commit), and parquet leftovers
-        # inside dirs the manifest already folded (a crash mid-cleanup)
-        for d in os.listdir(matches_dir) if os.path.isdir(matches_dir) else []:
-            if (
-                re.fullmatch(r"mbase_v\d+", d)
-                and d != man["base"]
-                and os.path.isdir(os.path.join(matches_dir, d))
-            ):
-                shutil.rmtree(os.path.join(matches_dir, d))
-        for name in man["folded"]:
-            p = os.path.join(matches_dir, name)
-            if os.path.isdir(p):
-                _strip_to_meta(p)
-        already_folded = set(man["folded"])
-        eligible = sorted(
-            d
-            for d in (os.listdir(matches_dir) if os.path.isdir(matches_dir) else [])
-            if re.fullmatch(r"[bp]\d+", d)
-            and os.path.isdir(os.path.join(matches_dir, d))
-            and d not in already_folded
-            and _read_batch_meta(matches_dir, d) is not None
+        new_base = VB.begin(
+            matches_dir, man["base"], "mbase", man["folded"], keep=_BATCH_META
         )
+        eligible = [
+            d for d in _unfolded_batches(matches_dir, man)
+            if _read_batch_meta(matches_dir, d) is not None
+        ]
         if not eligible:
             return []
-        corpus = None
-        if man["base"] is not None:
-            corpus = spark.read.parquet(os.path.join(matches_dir, man["base"]))
-        for d in eligible:
-            rows = spark.read.parquet(os.path.join(matches_dir, d))
-            corpus = rows if corpus is None else corpus.unionByName(rows)
-        n = max(
-            [int(m.group(1)) for d in os.listdir(matches_dir)
-             if (m := re.fullmatch(r"mbase_v(\d+)", d))] + [0]
-        ) + 1
-        new_base = f"mbase_v{n}"
-        # coalesce to byte-sized output files: the union write would
-        # otherwise carry one file per input dir into the base, forever
-        n_out = _fold_output_partitions(
-            [os.path.join(matches_dir, d) for d in eligible]
-            + ([os.path.join(matches_dir, man["base"])] if man["base"] else [])
+        _write_fold(
+            spark, matches_dir,
+            ([man["base"]] if man["base"] else []) + eligible, new_base,
         )
-        corpus = corpus.coalesce(n_out)
-        corpus.write.parquet(os.path.join(matches_dir, new_base))
-        if _lease is not None:
-            # the base rewrite is the long action and folds have no
-            # micro-batch cadence: refresh the staleness clock (and
-            # learn of any takeover) BEFORE the commit swap
-            _lease.heartbeat()
-        new_man = {
-            "base": new_base,
-            "folded": sorted(set(man["folded"]) | set(eligible)),
-        }
-        tmp = os.path.join(matches_dir, _MATCHES_MANIFEST + ".tmp")
-        with open(tmp, "w") as f:
-            json.dump(new_man, f)
-        os.replace(tmp, os.path.join(matches_dir, _MATCHES_MANIFEST))
-        # cleanup past the commit point: the superseded base is
-        # unreferenced, and each folded dir keeps ONLY its meta
-        if man["base"] is not None:
-            shutil.rmtree(
-                os.path.join(matches_dir, man["base"]), ignore_errors=True
-            )
-        for d in eligible:
-            _strip_to_meta(os.path.join(matches_dir, d), ignore_errors=True)
+        VB.commit(
+            matches_dir, _MATCHES_MANIFEST,
+            {"base": new_base, "folded": sorted(set(man["folded"]) | set(eligible))},
+            man["base"], eligible, keep=_BATCH_META, lease=lease,
+        )
         return eligible
 
 
@@ -1712,17 +1606,11 @@ def read_ingested_matches(spark: SparkSession, matches_dir: str) -> DataFrame:
     per-batch subdirectories. Folded dirs hold only their meta and
     read through the base - the multiset is unchanged."""
     man = _matches_manifest(matches_dir)
-    folded = set(man["folded"])
-    dirs = sorted(
-        d
-        for d in os.listdir(matches_dir)
-        if re.fullmatch(r"[bp]\d+", d)
-        and os.path.isdir(os.path.join(matches_dir, d))
-        and d not in folded
-    )
-    paths = [os.path.join(matches_dir, d) for d in dirs]
-    if man["base"] is not None:
-        paths.insert(0, os.path.join(matches_dir, man["base"]))
+    paths = [
+        os.path.join(matches_dir, d)
+        for d in ([man["base"]] if man["base"] else [])
+        + _unfolded_batches(matches_dir, man)
+    ]
     if not paths:
         raise ValueError(f"no ingested match batches under {matches_dir}")
     return spark.read.parquet(*paths)
@@ -1751,6 +1639,13 @@ def lifecycle_status(
     is unreadable or older than ``lease_stale_after`` - pass the SAME
     value the entry points use; the advice is sized by it - meaning a
     crashed writer the next cron will take over, or a clock problem).
+    Each store section lists its ``litter``: the version dirs its
+    manifest does not name (``pipelines.versioned.litter``, one rule
+    for all three), left by a fold that crashed; a store with litter
+    adds ``compact_index_crashed_previously`` /
+    ``fold_payroll_crashed_previously`` /
+    ``fold_matches_crashed_previously`` - the next such fold's entry GC
+    removes it.
 
     The monitor holds no lease, so a compaction can move the index
     under the read: transient races surface as
@@ -1777,32 +1672,21 @@ def lifecycle_status(
             if holder is None or age > lease_stale_after:
                 actions.append("investigate_lease")
 
-    meta_path = os.path.join(index_dir, FZ._INDEX_META)
-    if os.path.exists(meta_path):
-        with open(meta_path) as f:
-            meta = json.load(f)
-    else:
-        meta = None  # legacy plain-parquet layout (or not an index dir)
-    live_gens = FZ.list_index_generations(index_dir)
-    staging = sorted(
-        d
-        for d in (os.listdir(index_dir) if os.path.isdir(index_dir) else [])
-        if d == "_compact_staging" or re.fullmatch(r"_torn_g\d+\.staging", d)
-    )
+    meta = FZ.title_index_meta(index_dir) or {}
+    folded_gens = sorted(meta.get("folded_generations", []))
+    live_gens = [
+        g for g in FZ.list_index_generations(index_dir) if g not in folded_gens
+    ]
     index: dict = {
-        "format": (meta or {}).get("format", "legacy"),
-        "rebuilding": bool((meta or {}).get("rebuilding")),
+        "format": meta.get("format", "legacy"),
+        "rebuilding": bool(meta.get("rebuilding")),
         "generations_pending": live_gens,
-        "folded_generations": FZ.title_index_folded_generations(index_dir),
-        "staging_litter": staging,
+        "folded_generations": folded_gens,
+        "litter": VB.litter(index_dir, meta.get("base"), "base"),
     }
     if live_gens:
         actions.append("compact_index")
-    if staging:
-        # harmless (entry-time GC reclaims) but worth surfacing: it
-        # means the last compaction crashed mid-fold
-        actions.append("compact_index_crashed_previously")
-    if meta and meta.get("format") == "bucketed" and not meta.get("rebuilding"):
+    if meta.get("format") == "bucketed" and not meta.get("rebuilding"):
         try:
             stats = FZ.title_index_bucket_stats(index_dir)
             suggestion = FZ.suggest_index_buckets(index_dir, stats=stats)
@@ -1836,6 +1720,7 @@ def lifecycle_status(
             "folded_deltas": man["folded_deltas"],
             "deltas_pending": live,
             "fold_eligible": eligible,
+            "litter": VB.litter(payroll_dir, man["base"], "base"),
         }
         if eligible:
             actions.append("fold_payroll")
@@ -1843,25 +1728,26 @@ def lifecycle_status(
     matches: dict | None = None
     if matches_dir is not None:
         man = _matches_manifest(matches_dir)
-        batch_dirs = sorted(
-            d
-            for d in (
-                os.listdir(matches_dir) if os.path.isdir(matches_dir) else []
-            )
-            if re.fullmatch(r"[bp]\d+", d)
-            and os.path.isdir(os.path.join(matches_dir, d))
-        )
-        folded_names = set(man["folded"])
-        unfolded = [d for d in batch_dirs if d not in folded_names]
+        unfolded = _unfolded_batches(matches_dir, man)
         torn = [d for d in unfolded if _read_batch_meta(matches_dir, d) is None]
         matches = {
             "base": man["base"],
             "folded": len(man["folded"]),
             "unfolded": unfolded,
             "torn": torn,
+            "litter": VB.litter(matches_dir, man["base"], "mbase"),
         }
         if set(unfolded) - set(torn):
             actions.append("fold_matches")
+
+    # a version dir the manifest does not name is litter from a fold
+    # that crashed: harmless (the next fold's entry GC removes it), but
+    # worth surfacing
+    for step, store in (
+        ("compact_index", index), ("fold_payroll", payroll), ("fold_matches", matches)
+    ):
+        if store and store["litter"]:
+            actions.append(f"{step}_crashed_previously")
 
     return {
         "lease": lease,

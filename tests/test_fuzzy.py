@@ -1445,6 +1445,7 @@ def test_compact_persisted_index_restores_bucketed_no_shuffle(spark, tmp_path):
     import os
 
     from nyc_government_hiring_audit_data_platform_spark.operators import fuzzy as FZ
+    from nyc_government_hiring_audit_data_platform_spark.pipelines import versioned as VB
     from nyc_government_hiring_audit_data_platform_spark.plans import inspect as PI
 
     payroll = HA.make_payroll_fixture(spark, 400).withColumn(
@@ -1481,7 +1482,10 @@ def test_compact_persisted_index_restores_bucketed_no_shuffle(spark, tmp_path):
 
         FZ.compact_persisted_title_index(spark, index_dir)
         assert FZ.list_index_generations(index_dir) == []
-        assert not os.path.exists(os.path.join(index_dir, "_compact_staging"))
+        # the superseded base version is gone: the meta's is the only one
+        assert VB.litter(
+            index_dir, FZ.title_index_meta(index_dir)["base"], "base"
+        ) == []
         after = probe()
         assert PI.shuffle_count(after) < n_with_gen  # bucketed shape is back
         assert sorted(map(tuple, after.collect())) == want and len(want) > 0
@@ -1638,8 +1642,10 @@ def test_read_reregisters_catalog_table_after_foreign_rebucket(spark, tmp_path):
     process (this session never saw the DROP). Reusing the stale
     CLUSTERED BY declaration over differently-bucketed files lets a
     bucketed join elide its exchange on a false premise - wrong rows.
-    read_title_index must verify the registered bucket count against
-    the meta and re-register on mismatch."""
+    Each base version registers under its own table name, so the
+    re-bucketed fold's meta names a table this session has never
+    seen: read_title_index registers it at the new count, and the
+    stale entry under the old name is never consulted."""
     import json
     import os
 
@@ -1652,44 +1658,47 @@ def test_read_reregisters_catalog_table_after_foreign_rebucket(spark, tmp_path):
     )
     with open(os.path.join(index_dir, "_index_meta.json")) as f:
         _meta = json.load(f)
-    tname, key = _meta["table"], _meta["key"]
+    old_table, key = _meta["table"], _meta["key"]
     try:
         want = sorted(map(tuple, FZ.read_title_index(spark, index_dir).collect()))
-        # simulate the OTHER session's stale cache: this session's entry
-        # declares 4 buckets while the files (and meta) are 8-bucketed
-        schema = spark.read.parquet(os.path.join(index_dir, "base")).schema
+        # the foreign process re-buckets to 4 ...
+        FZ.compact_persisted_title_index(spark, index_dir, n_buckets=4)
+        new = FZ.title_index_meta(index_dir)
+        assert new["table"] != old_table and new["n_buckets"] == 4
+        # ... and leaves THIS session as it would find it: the new
+        # table registered only in the foreign catalog, the old
+        # 8-bucket entry still registered here
+        spark.sql(f"DROP TABLE IF EXISTS {new['table']}")
+        schema = spark.read.parquet(os.path.join(index_dir, new["base"])).schema
         cols = ", ".join(
             f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields
         )
-        spark.sql(f"DROP TABLE IF EXISTS {tname}")
         spark.sql(
-            f"CREATE TABLE {tname} ({cols}) USING PARQUET "
-            f"CLUSTERED BY (`{key}`) INTO 4 BUCKETS "
-            f"LOCATION '{os.path.join(index_dir, 'base')}'"
+            f"CREATE TABLE {old_table} ({cols}) USING PARQUET "
+            f"CLUSTERED BY (`{key}`) INTO 8 BUCKETS "
+            f"LOCATION '{os.path.join(index_dir, _meta['base'])}'"
         )
-        # ... including that session's verification cache: it verified 4
-        # back when its meta said 4; the foreign re-bucket moved meta to
-        # 8, which is exactly what re-arms the DESCRIBE
-        FZ._VERIFIED_BUCKET_SPECS[
-            (spark.sparkContext.applicationId, tname)
-        ] = 4
         got_df = FZ.read_title_index(spark, index_dir)
         desc = {
             r["col_name"]: r["data_type"]
-            for r in spark.sql(f"DESCRIBE TABLE EXTENDED {tname}").collect()
+            for r in spark.sql(f"DESCRIBE TABLE EXTENDED {new['table']}").collect()
         }
-        assert int(desc["Num Buckets"]) == 8  # re-registered, not reused
+        assert int(desc["Num Buckets"]) == 4  # registered at the meta's count
         assert sorted(map(tuple, got_df.collect())) == want and len(want) > 0
     finally:
-        spark.sql(f"DROP TABLE IF EXISTS {tname}")
+        spark.sql(f"DROP TABLE IF EXISTS {old_table}")
+        spark.sql(f"DROP TABLE IF EXISTS {FZ.title_index_meta(index_dir)['table']}")
 
 
 def test_bucket_spec_verification_cached_off_hot_path(spark, tmp_path, monkeypatch):
     """Review finding (r13, pass 2): the stale-declaration DESCRIBE ran
     on EVERY bucketed read - a catalog round trip per micro-batch probe
-    guarding against a drift that only a compaction can cause. It now
-    runs only when the meta's bucket count moves away from what this
-    session last verified."""
+    guarding against a drift that only a compaction can cause. A
+    table name now stands for one base version whose files never
+    change, so a read of a registered index issues no catalog SQL at
+    all; a (foreign) re-bucketing compaction moves the meta to a new
+    name, which the next read registers once - still without a
+    DESCRIBE."""
     import json
     import os
 
@@ -1703,7 +1712,7 @@ def test_bucket_spec_verification_cached_off_hot_path(spark, tmp_path, monkeypat
     with open(os.path.join(index_dir, "_index_meta.json")) as f:
         tname = json.load(f)["table"]
     try:
-        FZ.read_title_index(spark, index_dir).count()  # registers + caches
+        FZ.read_title_index(spark, index_dir).count()  # registered
         calls = []
         real_sql = spark.sql
 
@@ -1713,20 +1722,21 @@ def test_bucket_spec_verification_cached_off_hot_path(spark, tmp_path, monkeypat
 
         monkeypatch.setattr(spark, "sql", spy)
         FZ.read_title_index(spark, index_dir).count()
-        assert not [q for q in calls if q.startswith("DESCRIBE")]
-        # the meta's count moving re-arms the verification
+        assert calls == []
+        # a re-bucketing compaction by another process: its new table
+        # is registered in ITS catalog, not this one
         monkeypatch.undo()
-        meta_path = os.path.join(index_dir, "_index_meta.json")
-        with open(meta_path) as f:
-            meta = json.load(f)
-        meta["n_buckets"] = 8  # simulate a foreign re-bucket's meta
-        with open(meta_path, "w") as f:
-            json.dump(meta, f)
-        calls.clear()
+        FZ.compact_persisted_title_index(spark, index_dir, n_buckets=8)
+        tname = FZ.title_index_meta(index_dir)["table"]
+        spark.sql(f"DROP TABLE IF EXISTS {tname}")
         monkeypatch.setattr(spark, "sql", spy)
         FZ.read_title_index(spark, index_dir).count()
-        assert [q for q in calls if q.startswith("DESCRIBE")]
+        assert [q.split(" (")[0] for q in calls] == [f"CREATE TABLE {tname}"]
+        calls.clear()
+        FZ.read_title_index(spark, index_dir).count()
+        assert calls == []
     finally:
+        monkeypatch.undo()
         spark.sql(f"DROP TABLE IF EXISTS {tname}")
 
 
@@ -1941,7 +1951,8 @@ def test_title_index_edge_regressions(spark, tmp_path):
 
     d = str(tmp_path / "idx")
     FZ.write_title_index(idx, d, "bucketed", n_buckets=4)
-    tname = FZ._index_table_name(d)
+    tname = FZ.title_index_meta(d)["table"]
+    assert FZ._index_table_name(d) in tname  # every version shares the stem
     assert spark.catalog.tableExists(tname)
     FZ.write_title_index(idx, d, "parquet")
     assert not spark.catalog.tableExists(tname)
@@ -2232,18 +2243,19 @@ def test_compaction_skips_torn_generations(spark, tmp_path):
     assert got == want  # the base == exactly base+d0, no torn rows
 
 
-def test_compaction_entry_gc_reclaims_stranded_staging(spark, tmp_path):
-    """Round-12 VERDICT ask #5: a hard kill between compaction's
-    torn-stash rename and the finally-restore strands
-    ``_torn_g{j}.staging`` (and possibly ``_compact_staging``); the
-    next compaction's entry GC must reclaim both directions - RESTORE
-    a stash whose g{j} is absent (the torn generation stays live for
-    the maintenance replay), REMOVE one whose g{j} a replay already
-    rewrote."""
+def test_compaction_entry_gc_reclaims_stranded_staging(spark, tmp_path, monkeypatch):
+    """Round-12 VERDICT ask #5: a hard kill mid-compaction strands
+    leftovers that no reader ever sees and no replay ever reclaims;
+    the next compaction's entry GC must reclaim them in both crash
+    directions while a TORN generation (g1 without d1) stays live for
+    the maintenance replay. Killed before the meta swap, the fold
+    leaves an orphan base version; killed after it, the superseded
+    base and the folded g{j} dirs - which readers skip through the
+    meta's folded record."""
     import os
-    import shutil
 
     from nyc_government_hiring_audit_data_platform_spark.operators import fuzzy as FZ
+    from nyc_government_hiring_audit_data_platform_spark.pipelines import versioned as VB
 
     payroll_all = HA.make_payroll_fixture(spark, 300).withColumn(
         "rid", F.monotonically_increasing_id()
@@ -2267,39 +2279,50 @@ def test_compaction_entry_gc_reclaims_stranded_staging(spark, tmp_path):
     g1.write.parquet(os.path.join(index_dir, "g1"))
     g1_rows = sorted(map(tuple, spark.read.parquet(
         os.path.join(index_dir, "g1")).collect()))
+    want = sorted(map(tuple, FZ.read_title_index(spark, index_dir).collect()))
+    real_write = VB.write_atomic
 
-    # direction 1: the kill landed after the stash rename, before the
-    # restore - g1 is gone, _torn_g1.staging holds it, and the fold's
-    # own staging dir is also stranded
-    os.rename(
-        os.path.join(index_dir, "g1"),
-        os.path.join(index_dir, "_torn_g1.staging"),
-    )
-    os.makedirs(os.path.join(index_dir, "_compact_staging"))
+    def compact_killed(after_swap):
+        def killed(path, text):
+            if after_swap:
+                real_write(path, text)
+            raise RuntimeError("killed")
+
+        monkeypatch.setattr(VB, "write_atomic", killed)
+        with pytest.raises(RuntimeError, match="killed"):
+            FZ.compact_persisted_title_index(
+                spark, index_dir, payroll_dir=payroll_dir
+            )
+        monkeypatch.undo()
+
+    def litter():
+        return VB.litter(index_dir, FZ.title_index_meta(index_dir)["base"], "base")
+
+    # direction 1: killed after writing the new base, before the swap -
+    # an orphan version readers never follow
+    compact_killed(after_swap=False)
+    assert litter() == ["base_v2"]
+    assert FZ.title_index_folded_generations(index_dir) == []
+    assert sorted(map(tuple, FZ.read_title_index(spark, index_dir).collect())) == want
     FZ.compact_persisted_title_index(spark, index_dir, payroll_dir=payroll_dir)
-    leftovers = [d for d in os.listdir(index_dir) if d.startswith("_torn")]
-    assert leftovers == []
-    assert not os.path.isdir(os.path.join(index_dir, "_compact_staging"))
-    # the torn generation was restored, then rode through this run's
-    # own stash/restore cycle: still live, never folded, rows intact
+    assert litter() == []
+    # the torn generation stayed live, never folded, rows intact
     assert FZ.title_index_folded_generations(index_dir) == [0]
     assert FZ.list_index_generations(index_dir) == [1]
     assert sorted(map(tuple, spark.read.parquet(
         os.path.join(index_dir, "g1")).collect())) == g1_rows
 
-    # direction 2: the maintenance replay rewrote g1 after the crash -
-    # the stranded stash is a dead duplicate and must be removed, the
-    # live (replayed) g1 kept
-    shutil.copytree(
-        os.path.join(index_dir, "g1"),
-        os.path.join(index_dir, "_torn_g1.staging"),
-    )
-    d1.write.parquet(os.path.join(payroll_dir, "d1"))  # commit batch 1
-    FZ.compact_persisted_title_index(spark, index_dir, payroll_dir=payroll_dir)
-    assert [d for d in os.listdir(index_dir) if d.startswith("_torn")] == []
-    # with d1 now committed the generation folded for real
+    # direction 2: the maintenance replay commits batch 1, and the fold
+    # is killed after the swap - the superseded base and the folded g1
+    # dir stay on disk, but readers do not count g1's rows twice
+    d1.write.parquet(os.path.join(payroll_dir, "d1"))
+    compact_killed(after_swap=True)
     assert FZ.title_index_folded_generations(index_dir) == [0, 1]
-    assert FZ.list_index_generations(index_dir) == []
+    assert litter() == ["base_v3"]
+    assert FZ.list_index_generations(index_dir) == [1]  # leftover dir
+    assert sorted(map(tuple, FZ.read_title_index(spark, index_dir).collect())) == want
+    FZ.compact_persisted_title_index(spark, index_dir, payroll_dir=payroll_dir)
+    assert litter() == [] and FZ.list_index_generations(index_dir) == []
     got = sorted(map(tuple, FZ.read_title_index(
         spark, index_dir, generations=[]).collect()))
     want = sorted(map(tuple, HA.build_payroll_title_index(
@@ -2482,6 +2505,9 @@ def test_compact_matches_corpus_folds_batches_preserving_history(spark, tmp_path
             prefilter_cutoff=1, score_cutoff=85, row_key="post_id",
         )
 
+    # nothing ingested yet: the dir does not even exist
+    with pytest.raises(ValueError, match="no ingested match batches"):
+        HA.read_ingested_matches(spark, matches_dir)
     land(a0, post_src, "a0"); ingest()       # b0
     land(d0, pay_src, "d0"); maintain()      # g0/d0 + p0
     before = sorted(
@@ -2979,6 +3005,125 @@ def test_payroll_gc_reclaims_post_commit_crash_leftovers(spark, tmp_path):
         key=key,
     )
     assert got == sorted(map(tuple, base.unionByName(d0).collect()), key=key)
+
+
+@pytest.mark.parametrize("crash", ["before_swap", "after_swap"])
+@pytest.mark.parametrize("store", ["index", "payroll", "matches"])
+def test_fold_crash_points_keep_readers_exact(
+    spark, tmp_path, monkeypatch, store, crash
+):
+    """The versioned-base protocol (pipelines/versioned.py) killed at
+    each of a fold's two crash points, for each store that uses it.
+    Killed after the new base version is written but before the
+    manifest swap, readers still return the old rows; killed after the
+    swap but before cleanup, they return the new rows with none
+    counted twice, although the folded generation dir is still on
+    disk. lifecycle_status reports the leftover version as litter, and
+    the next fold's entry GC removes every leftover."""
+    import os
+
+    from nyc_government_hiring_audit_data_platform_spark.operators import fuzzy as FZ
+    from nyc_government_hiring_audit_data_platform_spark.pipelines import versioned as VB
+
+    payroll = HA.make_payroll_fixture(spark, 150).withColumn(
+        "rid", F.monotonically_increasing_id()
+    )
+    base = payroll.filter(F.col("rid") % 3 < 2).drop("rid")
+    delta = payroll.filter(F.col("rid") % 3 == 2).drop("rid")
+    index_dir, payroll_dir, matches_dir = (
+        str(tmp_path / n) for n in ("index", "payroll", "matches")
+    )
+    FZ.write_title_index(
+        HA.build_payroll_title_index(base), index_dir, "parquet",
+        folded_generations=[0] if store == "payroll" else [],
+    )
+    if store == "index":
+        FZ.extend_title_index(
+            FZ.read_title_index(spark, index_dir),
+            HA._prep_payroll(delta, 2024, 2025), "title_description",
+        ).write.parquet(os.path.join(index_dir, "g0"))
+        root, stem, gen, keep, step = index_dir, "base", "g0", None, "compact_index"
+
+        def fold():
+            FZ.compact_persisted_title_index(spark, index_dir)
+
+        def read():
+            return FZ.read_title_index(spark, index_dir)
+
+        def manifest_base():
+            return FZ.title_index_meta(index_dir)["base"]
+    elif store == "payroll":
+        base.write.parquet(os.path.join(payroll_dir, "base"))
+        delta.write.parquet(os.path.join(payroll_dir, "d0"))
+        root, stem, gen, keep, step = payroll_dir, "base", "d0", None, "fold_payroll"
+
+        def fold():
+            HA.compact_payroll_corpus(spark, payroll_dir, index_dir)
+
+        def read():
+            return HA.read_payroll_corpus(spark, payroll_dir)
+
+        def manifest_base():
+            return HA._payroll_manifest(payroll_dir)["base"]
+    else:
+        root, stem, gen, keep, step = (
+            matches_dir, "mbase", "b1", "_meta.json", "fold_matches"
+        )
+
+        def fold():
+            HA.compact_matches_corpus(spark, matches_dir, lease_dir=index_dir)
+
+        def read():
+            return HA.read_ingested_matches(spark, matches_dir)
+
+        def manifest_base():
+            return HA._matches_manifest(matches_dir)["base"]
+
+        for name, rows in (("b0", base), ("b1", delta)):
+            rows.write.parquet(os.path.join(matches_dir, name))
+            HA._write_batch_meta(matches_dir, name, {"limit": None})
+            if name == "b0":
+                fold()  # b0 into mbase_v1; b1 is the pending generation
+
+    def rows():
+        return sorted(map(tuple, read().collect()), key=lambda r: tuple(map(str, r)))
+
+    want = rows()
+    old_base = manifest_base()
+    real_write = VB.write_atomic
+
+    def killed(path, text):
+        if crash == "after_swap":
+            real_write(path, text)
+        raise RuntimeError("killed")
+
+    monkeypatch.setattr(VB, "write_atomic", killed)
+    with pytest.raises(RuntimeError, match="killed"):
+        fold()
+    monkeypatch.undo()
+
+    litter = VB.litter(root, manifest_base(), stem)
+    if crash == "before_swap":
+        assert manifest_base() == old_base
+        assert len(litter) == 1 and litter != [old_base]  # the orphan
+    else:
+        assert manifest_base() != old_base and litter == [old_base]
+        assert any(
+            f.endswith(".parquet") for f in os.listdir(os.path.join(root, gen))
+        )
+    assert rows() == want and len(want) > 0
+    status = HA.lifecycle_status(index_dir, payroll_dir, matches_dir)
+    assert status[store]["litter"] == litter
+    assert f"{step}_crashed_previously" in status["actions"]
+
+    fold()
+    assert VB.litter(root, manifest_base(), stem) == []
+    if keep is None:
+        assert not os.path.exists(os.path.join(root, gen))
+    else:
+        assert os.listdir(os.path.join(root, gen)) == [keep]
+    assert rows() == want
+    assert not HA.lifecycle_status(index_dir, payroll_dir, matches_dir)[store]["litter"]
 
 
 def test_maintenance_backfill_broadcasts_batch_index(spark, tmp_path):

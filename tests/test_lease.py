@@ -243,10 +243,14 @@ def test_takeover_survives_peer_sweep_race(tmp_path, monkeypatch):
 
 
 def test_strip_to_meta_honors_ignore_errors_for_files(tmp_path, monkeypatch):
-    """Review finding (r13, pass 2): _strip_to_meta's ignore_errors was
-    honored only for subdirectories - a file-removal failure in the
-    post-commit cleanup would fail a fold that already committed."""
+    """Review finding (r13, pass 2): stripping a folded matches dir to
+    its meta honored ignore_errors only for subdirectories - a
+    file-removal failure in the post-commit cleanup would fail a fold
+    that already committed. The stripping is now the shared
+    versioned-base cleanup (``versioned._clear`` keeping the meta)."""
     import os
+
+    from nyc_government_hiring_audit_data_platform_spark.pipelines import versioned as VB
 
     p = tmp_path / "b0"
     p.mkdir()
@@ -257,11 +261,11 @@ def test_strip_to_meta_honors_ignore_errors_for_files(tmp_path, monkeypatch):
         raise PermissionError("EACCES")
 
     monkeypatch.setattr(os, "remove", denied)
-    HA._strip_to_meta(str(p), ignore_errors=True)  # must not raise
+    VB._clear(str(p), "_meta.json", ignore_errors=True)  # must not raise
     with pytest.raises(PermissionError):
-        HA._strip_to_meta(str(p), ignore_errors=False)
+        VB._clear(str(p), "_meta.json", ignore_errors=False)
     monkeypatch.undo()
-    HA._strip_to_meta(str(p))
+    VB._clear(str(p), "_meta.json")
     assert sorted(x.name for x in p.iterdir()) == ["_meta.json"]
 
 
