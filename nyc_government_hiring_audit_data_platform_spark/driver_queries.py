@@ -60,9 +60,9 @@ intermediate (e.g. the token/span relations in the dedup family) and do
 NOT unpersist it - the returned DataFrame is lazy, so the query cannot
 know when its consumer is done. Any long-lived harness that runs many
 queries in one session MUST call ``spark.catalog.clearCache()`` between
-queries (bench.py, tools/scale_probe.py and tests/test_oracle_parity.py
-all do); skipping it accumulates leaked storage blocks until GC thrash
-(a leaked persist once inflated a 5 s scale-probe reading to 79 s).
+queries (bench.py and tests/test_oracle_parity.py both do); skipping it
+accumulates leaked storage blocks until GC thrash (a leaked persist
+once inflated a 5 s scale-probe reading to 79 s, SCALING.md).
 """
 
 from __future__ import annotations

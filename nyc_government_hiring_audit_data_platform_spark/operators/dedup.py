@@ -128,28 +128,6 @@ def hashed_shingles_sql(expr: str, n: int = SHINGLE_N) -> str:
     )
 
 
-def minhash_signature(col: Column | str, n: int = SHINGLE_N) -> Column:
-    """array<bigint> of NUM_HASHES minhashes: min over shingles of
-    (a_k * base_hash + b_k) mod P. Pure array fold, map-side."""
-    return minhash_signature_from_shingles(char_shingles(col, n))
-
-
-def minhash_signature_sql(expr: str, n: int = SHINGLE_N) -> str:
-    return minhash_signature_from_shingles_sql(char_shingles_sql(expr, n))
-
-
-def minhash_signature_from_shingles_sql(sh_expr: str) -> str:
-    # hs is bound once via an immediately-applied list lambda; each
-    # list_min pass is then pure integer arithmetic over stored hashes.
-    # coalesce to P on empty shingle sets (matches the Spark fold start).
-    hs = f"list_transform({sh_expr}, s -> {base_hash_sql('s')})"
-    parts = ", ".join(
-        f"coalesce(list_min(list_transform(hs, h -> ({a} * h + {b}) % {MH_P})), {MH_P})"
-        for a, b in MH_COEF
-    )
-    return f"list_transform([{hs}], hs -> [{parts}])[1]"
-
-
 def band_hash(sig: Column, band: int) -> Column:
     """Hash of one LSH band (rows ROWS_PER_BAND*band .. +ROWS_PER_BAND)."""
     rows = [sig.getItem(band * ROWS_PER_BAND + r) for r in range(ROWS_PER_BAND)]
@@ -161,11 +139,6 @@ def band_hash_sql(sig_expr: str, band: int) -> str:
         f"{sig_expr}[{band * ROWS_PER_BAND + r + 1}]" for r in range(ROWS_PER_BAND)
     )
     return f"md5({rows})"
-
-
-def minhash_signature_from_shingles(sh: Column) -> Column:
-    """Signature from a shingle array column (hashes each shingle once)."""
-    return minhash_signature_from_hashes(F.transform(sh, base_hash))
 
 
 def minhash_signature_from_hashes(hs: Column) -> Column:

@@ -23,7 +23,7 @@ on tokens, scoring touches only candidates, and results join back to
 full rows by the normalized title. Hot-token skew ("analyst" in 30% of
 titles) is NOT something AQE fixes - skew-join splitting keys off
 shuffle-partition INPUT bytes while a hot title token is a few MB in,
-quadratic out (measured: tools/skew_probe.py, SCALING.md r9) - so the
+quadratic out (measured: SCALING.md, round 9 skew probe) - so the
 tokensort path carries a lossless length prefilter in the join
 condition plus an optional per-token occupancy cap (``max_block``)
 with documented subset-recall semantics.
@@ -579,8 +579,8 @@ def fuzzy_title_pairs_tokensort(
     condition as a residual filter, so incompatible-length pairs are
     dropped at the token equi-join's probe instead of surviving into
     the pair-dedup shuffle. Final output is bit-identical (the dropped
-    pairs cannot pass stage 2); on the skewed-title probe
-    (tools/skew_probe.py) this cuts the hot token's emitted candidates
+    pairs cannot pass stage 2); on the skewed-title probe (SCALING.md,
+    round 9) this cuts the hot token's emitted candidates
     by the length-compatibility factor before any shuffle.
 
     HOT-TOKEN SKEW (``max_block``, measured in SCALING.md): a token

@@ -29,15 +29,6 @@ def rename_project(df: DataFrame, mapping: Mapping[str, str]) -> DataFrame:
     return df.select(*[F.col(old).alias(new) for old, new in mapping.items()])
 
 
-def cast_columns(df: DataFrame, casts: Mapping[str, str]) -> DataFrame:
-    """P3 - e.g. fiscal_year string -> int (reference:
-    src/fuzzy_match_salary.py:68-70)."""
-    out = df
-    for name, dtype in casts.items():
-        out = out.withColumn(name, F.col(name).cast(dtype))
-    return out
-
-
 def filter_between(df: DataFrame, col: str, lo, hi) -> DataFrame:
     """Range predicate (P4, reference: src/fuzzy_match_salary.py:71)."""
     return df.filter(F.col(col).between(lo, hi))
@@ -47,13 +38,6 @@ def filter_not_null(df: DataFrame, col: str) -> DataFrame:
     """P5 - drop rows whose parse failed (reference:
     src/fuzzy_match_salary.py:78)."""
     return df.filter(F.col(col).isNotNull())
-
-
-def band_filter(df: DataFrame, value: str, lo: str, hi: str) -> DataFrame:
-    """Salary-band / interval-containment predicate (P7/J3, reference:
-    src/fuzzy_match_salary.py:144-154). Spark's 3-valued logic drops
-    null-valued rows exactly like the reference's explicit null checks."""
-    return df.filter((F.col(value) >= F.col(lo)) & (F.col(value) <= F.col(hi)))
 
 
 def paginate(df: DataFrame, order_by: list[Column | str], offset: int, limit: int) -> DataFrame:

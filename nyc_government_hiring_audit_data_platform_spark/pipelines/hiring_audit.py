@@ -498,16 +498,22 @@ def gold_salary_matches(matches: DataFrame) -> DataFrame:
     )
 
 
+def _durations_projection(durations: DataFrame) -> DataFrame:
+    """The 4-column rename projection of both GOLD durations tables,
+    shared by the ordered table, the one-shot DISTINCT and the
+    incremental count-state builders."""
+    return durations.select(
+        F.col("business_title").alias("title"),
+        F.col("lightcast_matched_occupation"),
+        F.col("Total Postings (Jan 2024 - Jun 2025)").alias("total_postings"),
+        F.col("Median Posting Duration").alias("median_posting_duration"),
+    )
+
+
 def gold_durations(durations: DataFrame) -> DataFrame:
     """GOLD.nyc_matched_job_posting_duration_SOC (sql/cleaned.sql:17-24)."""
-    return (
-        durations.select(
-            F.col("business_title").alias("title"),
-            F.col("lightcast_matched_occupation"),
-            F.col("Total Postings (Jan 2024 - Jun 2025)").alias("total_postings"),
-            F.col("Median Posting Duration").alias("median_posting_duration"),
-        )
-        .orderBy(F.desc("median_posting_duration"))
+    return _durations_projection(durations).orderBy(
+        F.desc("median_posting_duration")
     )
 
 
@@ -621,17 +627,6 @@ GOLD_DURATIONS_UNIQUE_KEYS = [
 GOLD_DURATIONS_UNIQUE_SPECS = [("n_rows", "1", "count")]
 
 
-def _durations_projection(durations: DataFrame) -> DataFrame:
-    """The GOLD unique table's 4-column rename projection, shared by the
-    one-shot DISTINCT and the incremental count-state builders."""
-    return durations.select(
-        F.col("business_title").alias("title"),
-        F.col("lightcast_matched_occupation"),
-        F.col("Total Postings (Jan 2024 - Jun 2025)").alias("total_postings"),
-        F.col("Median Posting Duration").alias("median_posting_duration"),
-    )
-
-
 def gold_durations_state(durations: DataFrame, sign: int = 1) -> DataFrame:
     """Count state for one durations batch (``sign=-1`` builds the
     retraction fold for deleted rows)."""
@@ -702,16 +697,18 @@ def run_pipeline(spark: SparkSession, limit: int | None = None) -> dict[str, Dat
 # ---------------------------------------------------------------------------
 
 # post_until is '17-SEP-2025'; Java's MMM parse needs title case (same
-# fix as functions.dates.parse_post_until, inlined as SQL)
+# fix as functions.dates.parse_post_until, inlined as SQL). get() and
+# the try_ parsers keep null-on-failure under ANSI, where [i] on a
+# short split and to_date/to_timestamp on a dirty string throw.
 _POST_UNTIL_DATE_SQL = (
-    "to_date(concat_ws('-', split(post_until, '-')[0], "
-    "concat(upper(substring(split(post_until, '-')[1], 1, 1)), "
-    "lower(substring(split(post_until, '-')[1], 2, 2))), "
-    "split(post_until, '-')[2]), 'dd-MMM-yyyy')"
+    "try_to_date(concat_ws('-', get(split(post_until, '-'), 0), "
+    "concat(upper(substring(get(split(post_until, '-'), 1), 1, 1)), "
+    "lower(substring(get(split(post_until, '-'), 1), 2, 2))), "
+    "get(split(post_until, '-'), 2)), 'dd-MMM-yyyy')"
 )
 _DURATION_SQL = (
     f"CAST(datediff({_POST_UNTIL_DATE_SQL}, "
-    "to_date(to_timestamp(posting_date, \"yyyy-MM-dd'T'HH:mm:ss[.SSS]\"))) AS INT)"
+    "to_date(try_to_timestamp(posting_date, \"yyyy-MM-dd'T'HH:mm:ss[.SSS]\"))) AS INT)"
 )
 
 GOLD_SQL: dict[str, str] = {
@@ -1509,7 +1506,7 @@ def _write_fold(
     write PRESERVES its input partitioning - N folded dirs produce N
     output files, old-base files carry into every new base, and the
     file count the fold exists to retire instead grows additively per
-    fold cycle (caught by tools/matches_fold_probe.py, round 13)."""
+    fold cycle (SCALING.md, "Round 13: small-files axis")."""
     paths = [os.path.join(root, d) for d in dirs]
     total = sum(
         os.path.getsize(os.path.join(dirpath, f))

@@ -63,10 +63,6 @@ def assert_filter_pushdown(df: DataFrame, fragment: str) -> None:
     )
 
 
-def uses_broadcast_join(df: DataFrame) -> bool:
-    return "BroadcastHashJoin" in physical_plan(df) or "BroadcastNestedLoopJoin" in physical_plan(df)
-
-
 def uses_window_group_limit(df: DataFrame) -> bool:
     """True when rank<=k compiled into WindowGroupLimit (partial top-K
     before the shuffle - the scalable per-group top-N)."""

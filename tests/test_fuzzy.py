@@ -332,6 +332,48 @@ def test_date_parse_null_on_failure_under_ansi(spark):
         ).collect()
         assert rows[0]["ts"] is None and rows[0]["d"] is None
         assert rows[1]["ts"] is not None and str(rows[1]["d"]) == "2025-09-17"
+
+        # the GOLD SQL twin keeps the same contract: a dirty post_until
+        # (short split, unparseable date) is a null duration there too,
+        # equal to the DataFrame path's, not an ANSI error
+        dirty = ["not-a-date", "also-bad", "notadate", "17-SEP-25", "17-SEP-2025"]
+        matches = spark.createDataFrame(
+            [
+                (f"t{i}", 1.0, 2.0, "2024-06-03T00:00:00.000", pu,
+                 "p", 1.5, "per Annum", 1.0, 0.0, 0.0, 90.0)
+                for i, pu in enumerate(dirty)
+            ],
+            "business_title string, salary_range_from double, "
+            "salary_range_to double, posting_date string, post_until string, "
+            "title_description string, base_salary double, pay_basis string, "
+            "regular_gross_paid double, total_ot_paid double, "
+            "total_other_pay double, score double",
+        )
+        durations = spark.createDataFrame(
+            [("t0", "occ", 1, 2.0)],
+            "business_title string, lightcast_matched_occupation string, "
+            "`Total Postings (Jan 2024 - Jun 2025)` int, "
+            "`Median Posting Duration` double",
+        )
+        sql = HA.gold_tables_sql(spark, matches, durations)
+        for name, ddf, key in [
+            ("nyc_salary_matches", HA.gold_salary_matches(matches), "posted_job_title"),
+            (
+                "nyc_salary_matches_unique_job_posting_title",
+                HA.gold_salary_matches_unique(matches),
+                "posted_job_title",
+            ),
+        ]:
+            got = {
+                r[key]: r["posting_duration_days"]
+                for r in sql[name].select(key, "posting_duration_days").collect()
+            }
+            want = {
+                r[key]: r["posting_duration_days"]
+                for r in ddf.select(key, "posting_duration_days").collect()
+            }
+            assert got == want, name
+            assert want["t0"] is None and want["t4"] == 471, name
     finally:
         spark.conf.set("spark.sql.ansi.enabled", old)
 
@@ -2404,7 +2446,7 @@ def test_folded_batches_keep_maintenance_checkpoint_pinned(spark, tmp_path):
 
 
 def test_corpus_fold_coalesces_output_files(spark, tmp_path):
-    """Probe finding (r13, tools/matches_fold_probe.py): the fold's
+    """Probe finding (SCALING.md, round 13 small-files axis): the fold's
     union write PRESERVED its input partitioning - one output file per
     folded dir, plus every old-base file carried into each new base,
     so the file count the fold exists to retire grew additively per
