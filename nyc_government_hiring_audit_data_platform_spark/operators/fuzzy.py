@@ -12,10 +12,14 @@ refinement - are re-expressed Spark-first:
    blocked candidate set is a SUPERSET of the qualifying pairs - the
    blocking is lossless and the plan is a uniform shuffle instead of a
    dense N x M matrix (SURVEY.md §7.3);
-2. scoring runs in Arrow-batched pandas UDFs over the (small) candidate
-   pair set, with pure-Python implementations of the published
+2. scoring runs in ONE Arrow-batched pandas UDF per join, above the pair
+   distinct, so each distinct candidate pair is scored once: it computes
+   token_set_ratio and runs WRatio only on the pairs that pass it (null
+   otherwise), with pure-Python implementations of the published
    fuzzywuzzy/rapidfuzz scorer algorithms (rapidfuzz is not available in
    this environment; the algorithms are public - MIT fuzzywuzzy spec).
+   The one-stage UDFs token_set_ratio_udf / wratio_udf score one stage
+   alone, for the scorer-kernel queries (parity rows U1/U2).
 
 At 100 TB: distinct-title dedup runs first (a few-hundred-thousand
 distinct titles at most, vs billions of rows), the blocked join shuffles
@@ -27,10 +31,11 @@ quadratic out (measured: SCALING.md, round 9 skew probe) - so the
 tokensort path carries a lossless length prefilter in the join
 condition plus an optional per-token occupancy cap (``max_block``)
 with documented subset-recall semantics.
-On a cluster with rapidfuzz installed, swap the list comprehensions in
-token_set_ratio_udf / wratio_udf for ``rapidfuzz.process.cpdist`` over
-the same candidate pairs (identical published algorithm, C++ kernel,
-~100x per-pair) - the plan shape and everything upstream is unchanged.
+On a cluster with rapidfuzz installed, swap the Python loops in
+_gated_wratio (and the kernels token_set_ratio_udf / wratio_udf) for
+``rapidfuzz.process.cpdist`` over the same candidate pairs (identical
+published algorithm, C++ kernel, ~100x per-pair) - the plan shape and
+everything upstream is unchanged.
 """
 
 from __future__ import annotations
@@ -195,6 +200,27 @@ def wratio_udf(a: pd.Series, b: pd.Series) -> pd.Series:
     )
 
 
+def _gated_wratio(a: pd.Series, b: pd.Series, prefilter: pd.Series) -> pd.Series:
+    """Both scoring stages in one pass over one pair per row: the
+    unrounded WRatio where the int-rounded token_set_ratio reaches
+    ``prefilter`` (the token_set_ratio_udf -> wratio_udf chain), null
+    where it does not - WRatio never runs on a pair stage 1 rejects."""
+    out = []
+    for x, y, cut in zip(a, b, prefilter):
+        x, y = x or "", y or ""
+        out.append(wratio(x, y) if int(round(token_set_ratio(x, y))) >= cut else None)
+    return pd.Series(out, dtype="float64")
+
+
+# Nondeterministic only to fence the optimizer: Catalyst pushes a filter
+# on a deterministic UDF's output through the pair distinct (grouping
+# columns only), so the UDF would run on every exploded candidate row
+# below the aggregate and again above it. A nondeterministic projection
+# stops that pushdown and adds no job; the output is a pure function of
+# the row.
+_gated_wratio_udf = F.pandas_udf(_gated_wratio, DoubleType()).asNondeterministic()
+
+
 # ---------------------------------------------------------------------------
 # the two-stage fuzzy join
 # ---------------------------------------------------------------------------
@@ -314,23 +340,26 @@ def _wratio_pairs(
 ) -> DataFrame:
     """The WRatio lane's pair function: blocking-key equi-join of an
     exploded probe side against an index (plus the salt when
-    ``salted``), pair distinct, then the two scoring stages. Returns
-    (left_title, right_title, left_norm, right_norm, score)."""
+    ``salted``), pair distinct, then both scoring stages in one
+    prefilter-gated UDF (:func:`_gated_wratio`) over the distinct
+    pairs. Returns (left_title, right_title, left_norm, right_norm,
+    score)."""
     cand = (
         probe.join(index, ["blk", "salt"] if salted else ["blk"])
         .select("left_title", "left_norm", "right_title", "right_norm")
         .distinct()
     )
-    stage1 = cand.withColumn(
-        "ts_ratio", token_set_ratio_udf(F.col("left_norm"), F.col("right_norm"))
-    ).filter(F.col("ts_ratio") >= prefilter_cutoff)
-    # stage-1 int rounding above matches the reference's uint8 cdist;
-    # stage 2 compares the UNROUNDED float WRatio (reference :136-140)
-    # and rounds only the emitted score (stored as uint8 there).
-    stage2 = stage1.withColumn(
-        "score_f", wratio_udf(F.col("left_norm"), F.col("right_norm"))
+    # stage-1 int rounding inside the scorer matches the reference's
+    # uint8 cdist; stage 2 compares the UNROUNDED float WRatio (reference
+    # :136-140; null = rejected by stage 1) and only the emitted score is
+    # rounded, by Spark (HALF_UP, stored as uint8 there).
+    scored = cand.withColumn(
+        "score_f",
+        _gated_wratio_udf(
+            F.col("left_norm"), F.col("right_norm"), F.lit(prefilter_cutoff)
+        ),
     ).filter(F.col("score_f") >= score_cutoff)
-    return stage2.select(
+    return scored.select(
         "left_title",
         "right_title",
         "left_norm",

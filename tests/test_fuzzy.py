@@ -116,16 +116,21 @@ def test_wratio_bounds_and_symmetry():
 # -- blocked join completeness ----------------------------------------------
 
 
-def test_blocked_join_matches_bruteforce(spark):
+@pytest.mark.parametrize("prefilter,cutoff", [(85, 85), (95, 75), (70, 90)])
+def test_blocked_join_matches_bruteforce(spark, prefilter, cutoff):
     """The token+4gram blocked fuzzy join must find exactly the pairs a
-    brute-force all-pairs scorer finds (prefilter 85, cutoff 85)."""
+    brute-force all-pairs scorer finds. Each cutoff pair binds a
+    different gate on these fixtures: at 85/85 and 95/75 the prefilter
+    keeps out pairs WRatio alone would admit; at 70/90 WRatio is the
+    binding stage - so a scorer that skips, swaps or merges the two
+    cutoffs disagrees with the brute force."""
     left = HA.make_postings_fixture(spark, 120).select("business_title")
     right = HA.make_payroll_fixture(spark, 400).select("title_description")
 
     got = {
         (r["left_title"], r["right_title"], r["score"])
         for r in fuzzy_title_pairs(
-            left, right, "business_title", "title_description", 85, 85
+            left, right, "business_title", "title_description", prefilter, cutoff
         ).collect()
     }
 
@@ -152,9 +157,9 @@ def test_blocked_join_matches_bruteforce(spark):
         for rt, rn in rts:
             # stage 1 rounds (uint8 cdist parity); stage 2 compares the
             # unrounded WRatio (reference :136-140) and rounds for output
-            if int(round(token_set_ratio(ln, rn))) >= 85:
+            if int(round(token_set_ratio(ln, rn))) >= prefilter:
                 s = wratio(ln, rn)
-                if s >= 85:
+                if s >= cutoff:
                     want.add((lt, rt, int(round(s))))
     assert got == want
 

@@ -98,6 +98,71 @@ def test_fuzzy_pipeline_no_cartesian(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
+def _unwrap(node):
+    """An executed plan node with adaptive query stages and
+    whole-stage-codegen wrappers seen through."""
+    while True:
+        name = node.getClass().getSimpleName()
+        if name.endswith("QueryStageExec"):
+            node = node.plan()
+        elif name == "AdaptiveSparkPlanExec":
+            node = node.executedPlan()
+        elif name in ("WholeStageCodegenExec", "InputAdapter"):
+            node = node.child()
+        else:
+            return node
+
+
+def _plan_kids(node) -> list:
+    ch = node.children()
+    return [_unwrap(ch.apply(i)) for i in range(ch.size())]
+
+
+def _plan_nodes(plan) -> list:
+    out, todo = [], [_unwrap(plan)]
+    while todo:
+        out.append(todo.pop())
+        todo += _plan_kids(out[-1])
+    return out
+
+
+def test_wratio_scorer_runs_once_above_pair_distinct(spark):
+    """The WRatio lane scores each distinct candidate pair once: the
+    executed plan has ONE Arrow UDF (the prefilter-gated scorer), it
+    reads the pair-distinct HashAggregate directly, and the rows fed to
+    it are the distinct (left_title, right_title) candidates. A filter
+    on a deterministic UDF's output is pushed below the distinct, which
+    puts a second scorer under the aggregate over every exploded
+    candidate row."""
+    from nyc_government_hiring_audit_data_platform_spark.operators import fuzzy as FZ
+    from nyc_government_hiring_audit_data_platform_spark.pipelines import (
+        hiring_audit as HA,
+    )
+
+    left = HA.make_postings_fixture(spark, 120).select("business_title")
+    right = HA.make_payroll_fixture(spark, 400).select("title_description")
+    pairs = FZ.fuzzy_title_pairs(
+        left, right, "business_title", "title_description", 85, 85
+    )
+    pairs.collect()  # run it, so AQE settles the plan and fills metrics
+    udfs = [
+        n for n in _plan_nodes(pairs._jdf.queryExecution().executedPlan())
+        if n.getClass().getSimpleName() == "ArrowEvalPythonExec"
+    ]
+    assert len(udfs) == 1, f"{len(udfs)} Arrow UDF nodes, want 1"
+    (child,) = _plan_kids(udfs[0])
+    assert child.getClass().getSimpleName() == "HashAggregateExec", child.toString()
+    assert child.groupingExpressions().size() == 4, child.toString()
+
+    lk = FZ.build_fuzzy_title_index(left, "business_title").select(
+        "blk", F.col("right_title").alias("left_title")
+    )
+    rk = FZ.build_fuzzy_title_index(right, "title_description")
+    n_cand = lk.join(rk, "blk").select("left_title", "right_title").distinct().count()
+    fed = child.metrics().get("numOutputRows").get().value()
+    assert fed == n_cand
+
+
 def test_fuzzy_join_pairs_broadcast_is_aqe_decided(spark):
     """The fuzzy pair table must carry NO static broadcast hint (it can
     reach millions of pairs - BASELINE.md v2.0's 8.7M - where a forced
